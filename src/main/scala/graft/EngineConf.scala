@@ -29,9 +29,33 @@ import org.apache.spark.sql.SparkSession
   *
   * Overridable for probes: `SPARK_GRAFT_PREFER_SMJ=true`,
   * `SPARK_GRAFT_SHJ_LOCALMAP=0` restore stock planning.
+  *
+  * Local storage: `file:` is always [[sources.LocalFs]] (FileSystem API)
+  * and [[sources.LocalChecksumFs]] (FileContext API, which Structured
+  * Streaming's offsets and commits logs use). Without the native-hadoop
+  * library, stock Hadoop starts an OS process for every chmod (each
+  * create and mkdirs), every permission or owner read (`ls -ld`) and
+  * every link-status read (`readlink`, twice per FileContext rename);
+  * these classes answer the same calls through java.nio, with the same
+  * FileStatus fields and the same `.crc` checksum files. Median of 200
+  * calls on a 4-core host, JDK 17, Hadoop 3.4.2:
+  *
+  *   operation                          stock      java.nio
+  *   create + close (with .crc)         5.3 ms     0.3–0.4 ms
+  *   mkdirs                             2.4 ms     0.06–0.11 ms
+  *   getFileStatus(..).getPermission    2.8 ms     0.02–0.04 ms
+  *
+  * The setting has no switch: the stock classes do the same I/O, only
+  * slower. It must sit on the session builder, because Hadoop's
+  * FileSystem cache is JVM-wide and keyed by scheme, authority and user
+  * only: the first `file:` FileSystem created in the JVM is the one every
+  * later caller gets, whatever its own configuration says.
   */
 object EngineConf {
   def tune(b: SparkSession.Builder): SparkSession.Builder = b
+    .config("spark.hadoop.fs.file.impl", classOf[sources.LocalFs].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+      classOf[sources.LocalChecksumFs].getName)
     .config("spark.sql.join.preferSortMergeJoin",
       sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
     .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",

@@ -364,10 +364,38 @@ object Tables {
   private val nanosColsCache =
     scala.collection.concurrent.TrieMap[(String, Long, Long), Set[String]]()
 
-  private def nanosTimestampCols(spark: SparkSession, path: String): Set[String] = {
+  private def nanosTimestampCols(spark: SparkSession, path: String): Set[String] =
+    nanosColsCache.getOrElseUpdate(fileId(path), nanosTimestampColsUncached(spark, path))
+
+  private def fileId(path: String): (String, Long, Long) = {
     val f = new java.io.File(path)
-    nanosColsCache.getOrElseUpdate((path, f.lastModified, f.length),
-      nanosTimestampColsUncached(spark, path))
+    (path, f.lastModified, f.length)
+  }
+
+  /** Parquet schema inference runs one Spark job per read. Its answer is
+    * a function of the file (the same (path, mtime, length) identity as
+    * [[nanosColsCache]]) and of the session confs that steer parquet's
+    * type mapping, so both form the key. Only the StructType is cached:
+    * every [[load]] still builds a fresh relation with fresh expression
+    * IDs, so two loads of one table self-join on distinct columns. */
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive")
+  private val schemaCache = scala.collection.concurrent.TrieMap[
+    ((String, Long, Long), Seq[String]), org.apache.spark.sql.types.StructType]()
+
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val key = (fileId(path), schemaConfs.map(spark.conf.get))
+    schemaCache.get(key) match {
+      case Some(st) => spark.read.schema(st).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        schemaCache.putIfAbsent(key, df.schema)
+        df
+    }
   }
 
   private def nanosTimestampColsUncached(
@@ -470,7 +498,7 @@ object Tables {
     val nanosCols = nanosTimestampCols(spark, path)
     if (nanosCols.nonEmpty)
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(path)
+    val df = readParquet(spark, path)
     val nsFixed = nanosCols.foldLeft(df) { (d, c) =>
       if (d.schema(c).dataType == org.apache.spark.sql.types.LongType)
         d.withColumn(c,

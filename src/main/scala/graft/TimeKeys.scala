@@ -10,6 +10,9 @@ import org.apache.spark.sql.SparkSession
 object TimeKeys {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: TimeKeys <key> [key ...]")
+    val queries = SparkEntry.queries
+    val unknown = args.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown keys: ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
@@ -20,16 +23,21 @@ object TimeKeys {
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def step(body: => Unit): Unit = try body catch { case _: Throwable => () }
-    step { operators.Mining.warm(spark, sfDir) }
-    step { operators.LlmOps.warm(spark, sfDir) }
-    step { operators.Relational.warm(spark, sfDir) }
-    step { operators.SqlSurface.warm(spark, sfDir) }
-    args.foreach { k => step { SparkEntry.queries(k)(spark, sfDir).count() } }
+    // a failed warm-up is printed and the timing goes on
+    def step(what: String)(body: => Unit): Unit =
+      try body catch { case scala.util.control.NonFatal(e) =>
+        val first = Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+        println(s"[timekeys] $what failed: ${e.getClass.getSimpleName}: $first")
+      }
+    step("Mining.warm") { operators.Mining.warm(spark, sfDir) }
+    step("LlmOps.warm") { operators.LlmOps.warm(spark, sfDir) }
+    step("Relational.warm") { operators.Relational.warm(spark, sfDir) }
+    step("SqlSurface.warm") { operators.SqlSurface.warm(spark, sfDir) }
+    args.foreach { k => step(k) { queries(k)(spark, sfDir).count() } }
     val results = args.map { k =>
       val times = (1 to passes).map { _ =>
         val t0 = System.nanoTime()
-        SparkEntry.queries(k)(spark, sfDir).count()
+        queries(k)(spark, sfDir).count()
         (System.nanoTime() - t0) / 1e9
       }
       k -> times.min

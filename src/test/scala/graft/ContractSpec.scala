@@ -890,6 +890,67 @@ class ContractSpec extends SparkSpec {
     assert(Tables.load(spark, sf, "orders").schema("o_orderdate").dataType == tsType)
   }
 
+  test("Tables.load caches the inferred schema, never the frame") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val base = java.nio.file.Files.createTempDirectory("graft-schema")
+    val file = base.resolve("items.parquet")
+    // one parquet file, as the corpus tables are
+    def write(df: org.apache.spark.sql.DataFrame): Unit = {
+      val tmp = base.resolve(s"w${System.nanoTime()}").toString
+      df.coalesce(1).write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.move(part.toPath, file,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    // jobs started by `body`: a marker job after it flushes the listener bus
+    def jobsOf[T](body: => T): (T, Int) = {
+      val g = s"schema-${System.nanoTime()}"
+      val sc = spark.sparkContext
+      sc.setJobGroup(g, g)
+      val r = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$g-marker", g)
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains(s"$g-marker") && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(groups.contains(s"$g-marker"), "listener bus did not deliver the marker job")
+      (r, groups.asScala.count(_ == g))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      write(spark.range(10).selectExpr("id", "cast(id AS string) AS s"))
+      val uncached = spark.read.parquet(file.toString).schema
+      assert(jobsOf(Tables.load(spark, base.toString, "items"))._2 > 0, "cold load infers")
+      val (warm, warmJobs) = jobsOf(Tables.load(spark, base.toString, "items"))
+      assert(warmJobs == 0, "warm load starts no job")
+      assert(warm.schema == uncached)
+      // a parquet conf the inference depends on is part of the key
+      val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+      val nanos = spark.conf.get(nanosKey)
+      spark.conf.set(nanosKey, (!nanos.toBoolean).toString)
+      try assert(jobsOf(Tables.load(spark, base.toString, "items"))._2 > 0, "conf flip infers")
+      finally spark.conf.set(nanosKey, nanos)
+      // so is the file identity: a rewrite infers the new schema
+      write(spark.range(10).selectExpr("id", "cast(id AS string) AS s", "id * 2 AS d"))
+      val (rewritten, jobs) = jobsOf(Tables.load(spark, base.toString, "items"))
+      assert(jobs > 0, "rewrite infers")
+      assert(rewritten.columns.toSeq == Seq("id", "s", "d"))
+      // each load is a fresh relation: a self-join sees distinct columns
+      val (a, b) = (Tables.load(spark, base.toString, "items"), Tables.load(spark, base.toString, "items"))
+      assert(a.queryExecution.analyzed.output.map(_.exprId)
+        .intersect(b.queryExecution.analyzed.output.map(_.exprId)).isEmpty)
+      assert(a.join(b, a("id") === b("d")).count() == 5)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
+    }
+  }
+
   test("memo session retention: cycling many sessions never grows the cache monotonically") {
     // r15 VERDICT #3: memoized DataFrames strongly reference their
     // session, so without eviction a JVM that churns sessions pins every

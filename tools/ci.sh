@@ -3,8 +3,9 @@
 #
 #   tools/ci.sh            # compile + 268-key Verify + DuckDB oracle sweep
 #                          #   at sf0.001 (~2 min)
-#   tools/ci.sh --full     # ... plus the entry smoke and the whole
-#                          #   scalatest suite (~10 min)
+#   tools/ci.sh --full     # ... plus the entry smoke, the whole
+#                          #   scalatest suite and a traced table_io
+#                          #   benchmark run (~12 min)
 #   tools/ci.sh --sf <dir> # run the sweep against another sf dir
 #
 # The sweep is the driver's own correctness gate: graft.Verify dumps every
@@ -24,6 +25,7 @@ while [[ $# -gt 0 ]]; do
   esac
 done
 OUT=$(mktemp -d /tmp/graft_ci.XXXXXX)
+trap 'rm -rf "$OUT"' EXIT
 
 echo "[ci] compile"
 sbt -batch compile
@@ -39,5 +41,7 @@ if [[ $FULL -eq 1 ]]; then
   sbt -batch "runMain graft.Smoke" | grep -q "pass=true"
   echo "[ci] scalatest suite"
   sbt -batch test
+  echo "[ci] traced table_io benchmark: result fingerprints and storage checks"
+  python3 perfbench/run.py --workload table_io --seed 1 --seconds 12 --trace 1
 fi
 echo "[ci] GREEN"
