@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Engine-level session tuning shared by every main (Bench, TimeKeys,
-  * Verify, Smoke), so the timed surface and the correctness surface run
-  * the IDENTICAL engine configuration.
+  * Verify, Smoke, ExplainAudit, ScaleUp) and the test suites' session,
+  * so the timed, correctness and test surfaces run the IDENTICAL engine
+  * configuration.
   *
   * r19 join tuning (optimization guide §3.1 / §9), each knob
   * env-parameterized with a production-defensible local default:

@@ -897,7 +897,7 @@ object Mining {
     * fpm_assoc_rules share this one self-join+aggregate materialization
     * (the 25-item vocabulary bounds it to ≤300 rows regardless of scale,
     * so persisting it is always safe). */
-  private def pairSupports(s: SparkSession, dir: String): DataFrame =
+  private[graft] def pairSupports(s: SparkSession, dir: String): DataFrame =
     Tables.index(s, dir, "pairSupports") {
       val tx = txItems(s, dir)
       val a = tx.select(col("tid"), col("item").as("ia"))
@@ -906,10 +906,15 @@ object Mining {
         .groupBy("ia", "ib").agg(count(lit(1)).as("freq"))
     }
 
-  def fpmFreqPairs(s: SparkSession, dir: String): DataFrame =
+  /** Pairs frequent at MinSupPairs, with the basket count `n` alongside:
+    * the one thresholded pair frame of the pair, rule and graph keys. */
+  private def freqPairs(s: SparkSession, dir: String): DataFrame =
     pairSupports(s, dir)
       .crossJoin(broadcast(basketCount(s, dir)))
       .filter(col("freq") >= col("n") * MinSupPairs)
+
+  def fpmFreqPairs(s: SparkSession, dir: String): DataFrame =
+    freqPairs(s, dir)
       .select(concat_ws(",", col("ia"), col("ib")).as("itemset"), col("freq"))
       .orderBy("itemset")
 
@@ -921,10 +926,7 @@ object Mining {
     * ≤C(25,2) pair frame both are trivial, but at an unbounded pattern
     * vocabulary the heap form is the one that survives. */
   def fpmTopkPatterns(s: SparkSession, dir: String): DataFrame = {
-    val pairs = pairSupports(s, dir)
-      .crossJoin(broadcast(basketCount(s, dir)))
-      .filter(col("freq") >= col("n") * MinSupPairs)
-      .select(col("ia"), col("ib"), col("freq"))
+    val pairs = freqPairs(s, dir).select(col("ia"), col("ib"), col("freq"))
     graft.plans.TopK.perGroup(pairs,
         group = Seq("ia"), order = Seq("freq" -> false, "ib" -> true), k = 3)
       .orderBy(col("ia"), col("freq").desc, col("ib"))
@@ -1076,22 +1078,32 @@ object Mining {
     frequentEdgeDegrees(s, dir).count()
   }
 
+  /** Both orientations A⇒B and B⇒A of every frequent pair, with the pair
+    * support `sab`, the basket count `n` and the item supports `s_ante`
+    * and `s_cons`: the shared input of [[fpmAssocRules]] and
+    * [[fpmRuleMetrics]]. One `stack` over the thresholded pair frame
+    * emits both orientations, so the frame (and its basket-count
+    * broadcast) is scanned once; the item supports are the memoized
+    * [[itemSupports]], the same `count(lit(1))` longs a per-call
+    * aggregate over `txItems` would give. */
+  private def directedPairs(s: SparkSession, dir: String): DataFrame = {
+    val supp = itemSupports(s, dir)
+    freqPairs(s, dir)
+      .select(stack(lit(2), col("ia"), col("ib"), col("ib"), col("ia"))
+        .as(Seq("antecedent", "consequent")), col("freq").as("sab"), col("n"))
+      .join(broadcast(supp.select(col("item").as("antecedent"), col("freq").as("s_ante"))),
+        "antecedent")
+      .join(broadcast(supp.select(col("item").as("consequent"), col("freq").as("s_cons"))),
+        "consequent")
+  }
+
   /** Association rules A⇒B from frequent pairs, computed relationally so
     * the oracle can reproduce them exactly. All ratios are IEEE doubles
     * derived from exact integer supports in a fixed operation order —
-    * engine-identical without rounding. */
-  def fpmAssocRules(s: SparkSession, dir: String): DataFrame = {
-    val tx = txItems(s, dir)
-    val supp1 = tx.groupBy("item").agg(count(lit(1)).as("s"))
-    val pairs = pairSupports(s, dir)
-      .withColumnRenamed("freq", "sab")
-      .crossJoin(broadcast(basketCount(s, dir)))
-      .filter(col("sab") >= col("n") * MinSupPairs)
-    val directed = pairs.select(col("ia").as("antecedent"), col("ib").as("consequent"), col("sab"), col("n"))
-      .unionByName(pairs.select(col("ib").as("antecedent"), col("ia").as("consequent"), col("sab"), col("n")))
-    directed
-      .join(broadcast(supp1.withColumnRenamed("item", "antecedent").withColumnRenamed("s", "s_ante")), "antecedent")
-      .join(broadcast(supp1.withColumnRenamed("item", "consequent").withColumnRenamed("s", "s_cons")), "consequent")
+    * engine-identical without rounding. Reads [[directedPairs]]: one
+    * scan of the pair frame and no aggregate per call. */
+  def fpmAssocRules(s: SparkSession, dir: String): DataFrame =
+    directedPairs(s, dir)
       .withColumn("confidence", col("sab").cast("double") / col("s_ante"))
       .filter(col("confidence") >= MinConf)
       .select(
@@ -1100,34 +1112,19 @@ object Mining {
         (col("sab").cast("double") / col("s_ante") * col("n") / col("s_cons")).as("lift"),
         (col("sab").cast("double") / col("n")).as("support"))
       .orderBy("antecedent", "consequent")
-  }
 
   /** Rule INTERESTINGNESS metrics beyond confidence/lift — leverage
     * (support(A,B) − support(A)·support(B), the additive dependence
     * measure) and conviction ((1 − supp(B)) / (1 − conf), the
     * implication-strength odds; NULL at conf = 1 where conviction is
     * undefined) — over the same thresholded rule set as
-    * [[fpmAssocRules]]. All metrics derive from exact integer supports
-    * in a fixed operation order, so both engines produce identical
-    * doubles. */
+    * [[fpmAssocRules]], from the same [[directedPairs]] frame. All
+    * metrics derive from exact integer supports in a fixed operation
+    * order, so both engines produce identical doubles. */
   def fpmRuleMetrics(s: SparkSession, dir: String): DataFrame = {
-    val supp1 = txItems(s, dir).groupBy("item").agg(count(lit(1)).as("sup"))
-    val pairs = pairSupports(s, dir)
-      .withColumnRenamed("freq", "sab")
-      .crossJoin(broadcast(basketCount(s, dir)))
-      .filter(col("sab") >= col("n") * MinSupPairs)
-    val directed = pairs
-      .select(col("ia").as("antecedent"), col("ib").as("consequent"), col("sab"), col("n"))
-      .unionByName(pairs.select(col("ib").as("antecedent"), col("ia").as("consequent"),
-        col("sab"), col("n")))
-    val joined = directed
-      .join(broadcast(supp1.withColumnRenamed("item", "antecedent")
-        .withColumnRenamed("sup", "s_ante")), "antecedent")
-      .join(broadcast(supp1.withColumnRenamed("item", "consequent")
-        .withColumnRenamed("sup", "s_cons")), "consequent")
     val conf = col("sab").cast("double") / col("s_ante")
     val suppC = col("s_cons").cast("double") / col("n")
-    joined
+    directedPairs(s, dir)
       .filter(conf >= MinConf)
       .select(
         col("antecedent"), col("consequent"),
@@ -1239,21 +1236,20 @@ object Mining {
     rank.select(col("node").as("item"), col("rank")).orderBy("item")
   }
 
-  /** Symmetric edge frame of the frequent-pair CO-OCCURRENCE graph —
-    * the shared input of [[fpmPagerank]], [[fpmComponents]] and
-    * [[fpmBfsHops]]. Bounded by the item vocabulary at any corpus size
-    * (the pair frame is support-thresholded before it becomes edges). */
+  /** Undirected edges (ia < ib) of the frequent-pair CO-OCCURRENCE
+    * graph, the input of [[fpmComponents]] and [[fpmModularity]].
+    * Bounded by the item vocabulary at any corpus size (the pair frame
+    * is support-thresholded before it becomes edges). */
   private def coPairs(s: SparkSession, dir: String): DataFrame =
-    pairSupports(s, dir)
-      .crossJoin(broadcast(basketCount(s, dir)))
-      .filter(col("freq") >= col("n") * MinSupPairs)
-      .select(col("ia"), col("ib"))
+    freqPairs(s, dir).select(col("ia"), col("ib"))
 
-  private def coEdges(s: SparkSession, dir: String): DataFrame = {
-    val pairs = coPairs(s, dir)
-    pairs.select(col("ia").as("src"), col("ib").as("dst"))
-      .unionByName(pairs.select(col("ib").as("src"), col("ia").as("dst")))
-  }
+  /** Symmetric edge frame of the co-occurrence graph, the shared input
+    * of [[fpmPagerank]], [[fpmBfsHops]], [[fpmDegreeAssort]],
+    * [[fpmEccentricity]] and [[fpmModularity]]: both directions of every
+    * edge come from one `stack` over one scan of the pair frame. */
+  private def coEdges(s: SparkSession, dir: String): DataFrame =
+    coPairs(s, dir)
+      .select(stack(lit(2), col("ia"), col("ib"), col("ib"), col("ia")).as(Seq("src", "dst")))
 
   /** CONNECTED COMPONENTS over the co-occurrence graph — the classic
     * "which item families exist" graph question, and the mining-side
@@ -1661,10 +1657,7 @@ object Mining {
     * wedge branch — a dozen redundant broadcast exchanges. */
   private def frequentEdges(s: SparkSession, dir: String): DataFrame =
     Tables.index(s, dir, "frequentEdges") {
-      pairSupports(s, dir)
-        .crossJoin(broadcast(basketCount(s, dir)))
-        .filter(col("freq") >= col("n") * MinSupPairs)
-        .select(col("ia").as("x"), col("ib").as("y"))
+      freqPairs(s, dir).select(col("ia").as("x"), col("ib").as("y"))
     }
 
   /** Per-node degree of the frequent-pair graph — memoized with the
@@ -1774,9 +1767,7 @@ object Mining {
   def fpmCrossSupport(s: SparkSession, dir: String): DataFrame = {
     val sa = itemSupports(s, dir).select(col("item").as("ia"), col("freq").as("sa"))
     val sb = itemSupports(s, dir).select(col("item").as("ib"), col("freq").as("sb"))
-    pairSupports(s, dir)
-      .crossJoin(broadcast(basketCount(s, dir)))
-      .filter(col("freq") >= col("n") * MinSupPairs)
+    freqPairs(s, dir)
       .join(broadcast(sa), "ia")
       .join(broadcast(sb), "ib")
       .select(col("ia"), col("ib"), col("freq"), col("sa"), col("sb"),

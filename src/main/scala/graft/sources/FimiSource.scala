@@ -26,12 +26,13 @@ object FimiSource {
     val schema = StructType(Seq(
       StructField("tid", LongType, nullable = false),
       StructField("items", ArrayType(StringType, containsNull = false))))
+    val sepPattern = java.util.regex.Pattern.compile(sep) // once, not per line
     val rows = spark.read.textFile(path).rdd
       .zipWithIndex()
       .map { case (line, idx) =>
         org.apache.spark.sql.Row(
           idx,
-          line.trim.split(sep).filter(_.nonEmpty).distinct.sorted.toSeq)
+          sepPattern.split(line.trim).filter(_.nonEmpty).distinct.sorted.toSeq)
       }
     spark.createDataFrame(rows, schema).filter(size(col("items")) > 0)
   }

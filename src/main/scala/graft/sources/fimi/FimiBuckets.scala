@@ -173,6 +173,8 @@ class FimiBucketReader(
   private val wantItems = requiredSchema.fieldNames.contains("items")
   private val tidIdx = requiredSchema.fieldNames.indexOf("tid")
   private val itemsIdx = requiredSchema.fieldNames.indexOf("items")
+  // compiled once: String.split(regex) compiles a Pattern per line
+  private val sepPattern = java.util.regex.Pattern.compile(sep)
 
   private var fileIdx = -1
   private var reader: LineRecordReader = _
@@ -199,7 +201,7 @@ class FimiBucketReader(
       while (reader.nextKeyValue()) {
         val trimmed = reader.getCurrentValue.toString.trim
         if (trimmed.nonEmpty) {
-          val toks = trimmed.split(sep).filter(_.nonEmpty)
+          val toks = sepPattern.split(trimmed).filter(_.nonEmpty)
           val row = new GenericInternalRow(requiredSchema.length)
           if (wantTid) row.update(tidIdx, toks.head.toLong)
           if (wantItems) {

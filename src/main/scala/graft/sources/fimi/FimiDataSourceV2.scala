@@ -867,6 +867,8 @@ class FimiPartitionReader(
     }.toArray
   private val wantCells = extraCols.nonEmpty
   private val cellSplitRe = java.util.regex.Pattern.quote(FimiTable.CellSep.toString)
+  // compiled once: String.split(regex) compiles a Pattern per line
+  private val sepPattern = java.util.regex.Pattern.compile(sep)
 
   private val reader = {
     val split = new FileSplit(new Path(part.filePath), part.start, part.length, null)
@@ -904,7 +906,7 @@ class FimiPartitionReader(
             (part.fileOrdinal.toLong << FimiTable.OffsetBits) | offset)
         }
         if (wantItems) {
-          val items = trimmed.split(sep).filter(_.nonEmpty).distinct.sorted
+          val items = sepPattern.split(trimmed).filter(_.nonEmpty).distinct.sorted
           row.update(itemsIdx,
             new GenericArrayData(items.map(UTF8String.fromString(_))))
         }

@@ -368,7 +368,11 @@ class ContractSpec extends SparkSpec {
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "65536",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32768",
       "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "32768",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      // sort-merge planning, which EngineConf's join knobs keep once
+      // partitions pass 64m; this small fixture would plan shuffled-hash
+      "spark.sql.join.preferSortMergeJoin" -> "true",
+      "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "0")
     val prev = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
     scoped.foreach { case (k, v) => spark.conf.set(k, v) }
     try {

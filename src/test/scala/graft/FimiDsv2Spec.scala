@@ -48,6 +48,31 @@ class FimiDsv2Spec extends SparkSpec {
     assert(helper == got)
   }
 
+  test("item tokens equal String.split for spaces, tabs, whitespace runs and a custom sep") {
+    val cases = Seq(
+      "\\s+" -> Seq("a b c", "c\tb\ta", "  a \t\t b   c  ", "b\ta  a", "x"),
+      ","     -> Seq("a,b,c", "a,,b", ",a,b,", "  a,b  ", "c"))
+    for ((sep, lines) <- cases) {
+      // reference: String.split(sep), which compiles `sep` on every call
+      def tokens(line: String) = line.trim.split(sep).filter(_.nonEmpty)
+      def items(r: org.apache.spark.sql.Row) = r.getSeq[String](1).toList
+      val want = lines.map(l => tokens(l).distinct.sorted.toList)
+      val opts = Map("sep" -> sep)
+      val dir = tmpDir("sep")
+      writeLines(dir, "tx.dat", lines)
+      assert(readFimi(dir, opts).orderBy("tid").collect().map(items).toSeq == want, s"dsv2, sep $sep")
+      assert(graft.sources.FimiSource.read(spark, s"$dir/tx.dat", sep).orderBy("tid")
+        .collect().map(items).toSeq == want, s"FimiSource, sep $sep")
+      // bucketed layout: each line starts with its explicit tid
+      val bdir = tmpDir("sepb")
+      new java.io.File(s"$bdir/bucket=0").mkdirs()
+      val tidLines = lines.zipWithIndex.map { case (l, i) => s"$i${if (sep == ",") "," else "\t"}$l" }
+      writeLines(s"$bdir/bucket=0", "part-0.dat", tidLines)
+      assert(readFimi(bdir, opts + ("buckets" -> "1")).orderBy("tid").collect().map(items).toSeq ==
+        tidLines.map(l => tokens(l).drop(1).distinct.sorted.toList), s"bucketed, sep $sep")
+    }
+  }
+
   test("tids are deterministic and split-invariant: 1-byte-off split sizes agree") {
     val dir = tmpDir("splits")
     val lines = (0 until 2000).map(i => s"i${i % 7} i${i % 13} i${i % 31}")

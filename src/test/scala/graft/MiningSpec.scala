@@ -2,7 +2,13 @@ package graft
 
 import graft.operators.Mining
 import graft.functions.Udfs
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Cross-algorithm agreement — the reference family's own strongest
   * correctness check (SURVEY.md §5.1b): FP-Growth and Apriori are
@@ -230,6 +236,77 @@ class MiningSpec extends SparkSpec {
       convic.foreach(c => assert(c > 0.0, s"$k conviction $c"))
       if (conf == 1.0) assert(convic.isEmpty)
     }
+  }
+
+  /** Every node of `df`'s plan as it ran into the noop sink: AQE's final
+    * plan and its query stages included, a reused exchange counted once. */
+  private def noopWritePlan(df: DataFrame): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.atomic.AtomicReference[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.isInstanceOf[V2WriteCommand]) seen.compareAndSet(null, qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      df.write.format("noop").mode("overwrite").save()
+      val deadline = System.nanoTime() + 30000000000L
+      while (seen.get == null && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case c: CommandResultExec => Seq(c.commandPhysicalPlan)
+      case o => o.children ++ o.subqueries
+    }).flatMap(nodes)
+    nodes(Option(seen.get).getOrElse(fail("the noop write reported no executed plan")))
+  }
+
+  /** Scans of the memoized frame `memo` among `plan`'s nodes. */
+  private def memoScans(plan: Seq[SparkPlan], memo: DataFrame): Int = {
+    val builder = memo.queryExecution.withCachedData match {
+      case r: InMemoryRelation => r.cacheBuilder
+      case p => fail(s"not a memoized frame: ${p.nodeName}")
+    }
+    plan.count {
+      case scan: InMemoryTableScanExec => scan.relation.cacheBuilder eq builder
+      case _ => false
+    }
+  }
+
+  test("rule keys read memoized item supports and scan the pair frame once; values equal a driver recompute") {
+    val tx = Mining.txItems(spark, sf)
+    val pairs = Mining.pairSupports(spark, sf)
+    for (key <- Seq("fpm_assoc_rules", "fpm_rule_metrics")) {
+      val plan = noopWritePlan(SparkEntry.queries(key)(spark, sf))
+      assert(memoScans(plan, tx) == 0, s"$key aggregates the txItems memo instead of itemSupports")
+      assert(memoScans(plan, pairs) == 1, s"$key scans the pair frame ${memoScans(plan, pairs)} times")
+    }
+    // driver-side recompute, in the keys' own operation order
+    val rows = tx.collect().map(r => (r.getLong(0), r.getString(1)))
+    val n = rows.map(_._1).distinct.length.toLong
+    val sup = rows.groupBy(_._2).map { case (i, xs) => i -> xs.length.toLong }
+    val directed = pairs.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      .filter(_._3.toDouble >= n * 0.02)
+      .flatMap { case (a, b, f) => Seq((a, b, f), (b, a, f)) }
+      .filter { case (a, _, f) => f.toDouble / sup(a) >= 0.15 }
+    assert(directed.nonEmpty, "no rule above the thresholds at this sf")
+    val expRules = directed.map { case (a, b, f) =>
+      (a, b, f, f.toDouble / sup(a), f.toDouble / sup(a) * n / sup(b), f.toDouble / n)
+    }.toSet
+    val gotRules = Mining.fpmAssocRules(spark, sf).collect().map(r => (r.getString(0),
+      r.getString(1), r.getLong(2), r.getDouble(3), r.getDouble(4), r.getDouble(5))).toSet
+    assert(gotRules == expRules)
+    val expMetrics = directed.map { case (a, b, f) =>
+      val conf = f.toDouble / sup(a)
+      val suppC = sup(b).toDouble / n
+      (a, b, conf, f.toDouble / n - (sup(a).toDouble / n) * suppC,
+        if (conf == 1.0) None else Some((1.0 - suppC) / (1.0 - conf)))
+    }.toSet
+    val gotMetrics = Mining.fpmRuleMetrics(spark, sf).collect().map(r => (r.getString(0),
+      r.getString(1), r.getDouble(2), r.getDouble(3),
+      if (r.isNullAt(4)) None else Some(r.getDouble(4)))).toSet
+    assert(gotMetrics == expMetrics)
   }
 
   test("topk patterns: runs through TopKPerGroupExec and equals the window form") {

@@ -379,7 +379,11 @@ class RelationalSpec extends SparkSpec {
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1KB",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      // sort-merge planning, which EngineConf's join knobs keep once
+      // partitions pass 64m; this small fixture would plan shuffled-hash
+      "spark.sql.join.preferSortMergeJoin" -> "true",
+      "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "0")
     val prev = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
     scoped.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
