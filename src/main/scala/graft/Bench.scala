@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Per-key timing is CONTENTION-PROOF by construction:
   * every key is timed in TWO full interleaved sweeps (sweep 1 over all
@@ -16,13 +15,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = EngineConf.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineConf.session(cpus.toInt)
     // Untimed warmup: JVM/codegen/parquet-reader startup costs otherwise
     // land entirely on whichever query happens to run first. Each step is
     // fault-isolated so one failure cannot silently skip the rest (a

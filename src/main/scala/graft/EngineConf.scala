@@ -2,13 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Engine-level session tuning shared by every main (Bench, TimeKeys,
-  * Verify, Smoke, ExplainAudit, ScaleUp) and the test suites' session,
-  * so the timed, correctness and test surfaces run the IDENTICAL engine
-  * configuration.
+/** The engine's one session factory, [[session]], used by every main
+  * (Bench, Verify, Dev, ScaleUp) and the test suites' session, and the
+  * engine tuning it applies, [[tune]] (also applied by perfbench's own
+  * session), so the timed, correctness and test surfaces run the
+  * IDENTICAL engine configuration.
   *
-  * r19 join tuning (optimization guide §3.1 / §9), each knob
-  * env-parameterized with a production-defensible local default:
+  * r19 join tuning (optimization guide §3.1 / §9), two fixed knobs:
   *
   *  - `spark.sql.join.preferSortMergeJoin=false` — lets the planner pick
   *    shuffled-hash over sort-merge when its size conditions hold
@@ -28,8 +28,9 @@ import org.apache.spark.sql.SparkSession
   * within noise, no measured regression (an apparent triangle_count
   * regression did not reproduce at 5 passes).
   *
-  * Overridable for probes: `SPARK_GRAFT_PREFER_SMJ=true`,
-  * `SPARK_GRAFT_SHJ_LOCALMAP=0` restore stock planning.
+  * Both are SQL confs: a probe of stock planning sets
+  * `preferSortMergeJoin=true` and `maxShuffledHashJoinLocalMapThreshold=0`
+  * on its session at runtime, as the skew-join specs do.
   *
   * Local storage: `file:` is always [[sources.LocalFs]] (FileSystem API)
   * and [[sources.LocalChecksumFs]] (FileContext API, which Structured
@@ -53,12 +54,25 @@ import org.apache.spark.sql.SparkSession
   * later caller gets, whatever its own configuration says.
   */
 object EngineConf {
+
+  /** A `local[cpus]` session with `cpus` shuffle partitions, UTC and no
+    * UI, tuned by [[tune]]; `extra` confs go on the builder last. */
+  def session(cpus: Int, extra: (String, String)*): SparkSession = {
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    extra.foreach { case (k, v) => b.config(k, v) }
+    val spark = tune(b).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def tune(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.hadoop.fs.file.impl", classOf[sources.LocalFs].getName)
     .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
       classOf[sources.LocalChecksumFs].getName)
-    .config("spark.sql.join.preferSortMergeJoin",
-      sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-    .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64m"))
+    .config("spark.sql.join.preferSortMergeJoin", "false")
+    .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
 }

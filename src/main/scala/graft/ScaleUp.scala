@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only fixture scaler for the sf1 scale probe: replicates the
@@ -40,13 +40,7 @@ object ScaleUp {
     val dst = if (args.length > 1) args(1) else "/tmp/testdata/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = EngineConf.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineConf.session(cpus.toInt)
 
     def off(df: DataFrame, key: String): Long =
       pow10Above(df.agg(max(col(key))).head().getLong(0))

@@ -1,22 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // dev-only third arg: comma-separated key subset (driver passes 2 args)
+    // dev-only third arg: comma-separated key subset (driver passes 2
+    // args); an unknown name or a fourth arg is refused, not dropped
+    require(args.length <= 3, "usage: Verify <sfDir> <outDir> [key,key,...]")
     val keep: String => Boolean =
-      if (args.length > 2) args(2).split(",").toSet else (_ => true)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = EngineConf.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      if (args.length > 2) Dev.known(args(2).split(",").toSeq).toSet else (_ => true)
+    val spark = EngineConf.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // Keys that throw are recorded explicitly (not just logged): a
     // swallowed exception leaves no parquet dir, so the driver's compare

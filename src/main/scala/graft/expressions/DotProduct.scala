@@ -1,13 +1,12 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Bridge
 
 /** Native codegen'd dot product over two float/double array columns.
   *
@@ -76,6 +75,10 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
       val acc = ctx.freshName("acc")
+      // nullSafeCodeGen declares ev.isNull only for a nullable expression
+      val store =
+        if (nullable) s"if (!${ev.isNull}) { ${ev.value} = $acc; }"
+        else s"${ev.value} = $acc;"
       val nullCheck =
         if (checkNulls)
           s"if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"
@@ -87,7 +90,7 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
          |  $nullCheck
          |  $acc += ((double) $a.$lGet($i)) * ((double) $b.$rGet($i));
          |}
-         |if (!${ev.isNull}) { ${ev.value} = $acc; }
+         |$store
        """.stripMargin
     })
   }
@@ -101,44 +104,7 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
 
 object DotProduct {
 
-  val info = new ExpressionInfo(classOf[DotProduct].getName, "graft_dot")
-
-  /** Idempotent runtime registration on an existing session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier("graft_dot")
-    if (!reg.functionExists(id)) {
-      reg.registerFunction(id, info, exprs => DotProduct(exprs(0), exprs(1)))
-    }
-  }
-
-  /** Column-level helper (registers on the session first). */
-  def dot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_dot", a, b)
-  }
-}
-
-/** `spark.sql.extensions=graft.expressions.GraftExtensions` — the
-  * SparkSessionExtensions route to the same function for sessions built
-  * outside this library. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (FunctionIdentifier("graft_dot"), DotProduct.info,
-        (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_minhash_sig"), MinHashSig.info,
-        (exprs: Seq[Expression]) => MinHashSig(exprs(0), exprs(1))))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_simhash_agg"), SimHashAgg.info,
-        (exprs: Seq[Expression]) => SimHashAgg(exprs.head)))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_top_run"), TopRun.info,
-        (exprs: Seq[Expression]) => TopRun(exprs.head)))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_ngrams"), NGrams.info,
-        (exprs: Seq[Expression]) => NGrams.build(exprs)))
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
-  }
+  /** `graft_dot(a, b)` as a Column, built from the expression itself. */
+  def dot(a: Column, b: Column): Column =
+    Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
 }

@@ -1,12 +1,12 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Bridge
 
 /** One-pass MinHash signature over a token/shingle array:
   * `graft_minhash_sig(tokens, numPerm)` returns `array<long>` where
@@ -86,14 +86,7 @@ case class MinHashSig(left: Expression, right: Expression)
 
 object MinHashSig {
 
-  val info = new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash_sig")
-
-  /** Idempotent runtime registration on an existing session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier("graft_minhash_sig")
-    if (!reg.functionExists(id)) {
-      reg.registerFunction(id, info, exprs => MinHashSig(exprs(0), exprs(1)))
-    }
-  }
+  /** `graft_minhash_sig(tokens, numPerm)` as a Column. */
+  def minhashSig(tokens: Column, numPerm: Int): Column =
+    Bridge.column(MinHashSig(Bridge.expression(tokens), Literal(numPerm)))
 }

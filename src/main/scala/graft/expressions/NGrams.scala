@@ -1,13 +1,12 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native one-pass token n-gram builder — the shared kernel under every
@@ -116,11 +115,9 @@ object NGrams {
     }
   }
 
-  val info = new ExpressionInfo(classOf[NGrams].getName, "graft_ngrams")
-
-  /** The one SQL-facing builder (shared with GraftExtensions): validates
-    * arity and that args 2-4 are non-null foldable literals of the right
-    * type with k >= 1 — blind eval-and-cast surfaced raw
+  /** The one builder, for SQL text ([[GraftExtensions]]) and [[ngrams]]:
+    * validates arity and that args 2-4 are non-null foldable literals of
+    * the right type with k >= 1 — blind eval-and-cast surfaced raw
     * ClassCastException / eval-on-attribute errors (and a null k
     * silently became 0, which crashed per-row at execution). */
   def build(exprs: Seq[Expression]): NGrams = {
@@ -142,19 +139,9 @@ object NGrams {
       lit[Boolean](3, org.apache.spark.sql.types.BooleanType, "shortWhole"))
   }
 
-  /** Idempotent runtime registration on an existing session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier("graft_ngrams")
-    if (!reg.functionExists(id)) {
-      reg.registerFunction(id, info, build _)
-    }
-  }
-
-  /** Column-level helper (registers on the session first). */
-  def ngrams(spark: SparkSession, text: Column, k: Int,
-      keepDistinct: Boolean, shortWhole: Boolean): Column = {
-    register(spark)
-    call_function("graft_ngrams", text, lit(k), lit(keepDistinct), lit(shortWhole))
-  }
+  /** `graft_ngrams(text, k, keepDistinct, shortWhole)` as a Column,
+    * through the same validation as SQL text. */
+  def ngrams(text: Column, k: Int, keepDistinct: Boolean, shortWhole: Boolean): Column =
+    Bridge.column(build(Seq(Bridge.expression(text),
+      Literal(k), Literal(keepDistinct), Literal(shortWhole))))
 }

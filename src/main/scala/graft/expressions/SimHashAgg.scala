@@ -2,13 +2,13 @@ package graft.expressions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{DataType, LongType}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Bridge
 
 /** Single-pass SimHash bit-vote aggregate:
   * `graft_simhash_agg(h)` over a group of 64-bit token hashes returns
@@ -105,14 +105,7 @@ case class SimHashAgg(
 
 object SimHashAgg {
 
-  val info = new ExpressionInfo(classOf[SimHashAgg].getName, "graft_simhash_agg")
-
-  /** Idempotent runtime registration on an existing session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier("graft_simhash_agg")
-    if (!reg.functionExists(id)) {
-      reg.registerFunction(id, info, exprs => SimHashAgg(exprs.head))
-    }
-  }
+  /** `graft_simhash_agg(h)` as an aggregate Column. */
+  def simhashAgg(h: Column): Column =
+    Bridge.column(SimHashAgg(Bridge.expression(h)).toAggregateExpression())
 }

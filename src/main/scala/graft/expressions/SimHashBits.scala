@@ -1,12 +1,12 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Bridge
 
 /** One-pass SimHash from a token-hash array:
   * `graft_simhash(hs)` over `array<long>` returns the 64-bit majority
@@ -71,14 +71,6 @@ case class SimHashBits(child: Expression)
 
 object SimHashBits {
 
-  val info = new ExpressionInfo(classOf[SimHashBits].getName, "graft_simhash")
-
-  /** Idempotent runtime registration on an existing session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier("graft_simhash")
-    if (!reg.functionExists(id)) {
-      reg.registerFunction(id, info, exprs => SimHashBits(exprs.head))
-    }
-  }
+  /** `graft_simhash(hs)` as a Column. */
+  def simhash(hs: Column): Column = Bridge.column(SimHashBits(Bridge.expression(hs)))
 }

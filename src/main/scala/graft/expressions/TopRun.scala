@@ -1,13 +1,12 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd longest-equal-run length over a SORTED string array —
@@ -88,20 +87,6 @@ case class TopRun(child: Expression) extends UnaryExpression {
 
 object TopRun {
 
-  val info = new ExpressionInfo(classOf[TopRun].getName, "graft_top_run")
-
-  /** Idempotent runtime registration on an existing session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier("graft_top_run")
-    if (!reg.functionExists(id)) {
-      reg.registerFunction(id, info, exprs => TopRun(exprs.head))
-    }
-  }
-
-  /** Column-level helper (registers on the session first). */
-  def topRun(spark: SparkSession, a: Column): Column = {
-    register(spark)
-    call_function("graft_top_run", a)
-  }
+  /** `graft_top_run(sorted)` as a Column. */
+  def topRun(sorted: Column): Column = Bridge.column(TopRun(Bridge.expression(sorted)))
 }

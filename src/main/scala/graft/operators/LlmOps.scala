@@ -1,7 +1,12 @@
 package graft.operators
 
 import graft.Tables
-import graft.expressions.{DotProduct, MinHashSig}
+import graft.expressions.DotProduct.dot
+import graft.expressions.MinHashSig.minhashSig
+import graft.expressions.NGrams.ngrams
+import graft.expressions.SimHashAgg.simhashAgg
+import graft.expressions.SimHashBits
+import graft.expressions.TopRun.topRun
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,13 +38,6 @@ object LlmOps {
 
   private val Stopwords = Seq("a", "the")
 
-  /** Left-fold dot product in array order — engine-identical IEEE doubles.
-    * Runs as the native codegen'd [[graft.expressions.DotProduct]]
-    * (callers register it on the session first); `dotHof` is the
-    * equivalent HOF formulation, kept for the bit-equality test in
-    * LlmOpsSpec. */
-  private def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
-
   /** Interpreted-HOF formulation of `graft_top_run` — test-only
     * equivalence anchor (LlmOpsSpec pins it bit-equal to the native
     * expression over the real corpus arrays). */
@@ -54,6 +52,10 @@ object LlmOps {
       },
       acc => acc.getField("best"))
 
+  /** Left-fold dot product in array order — engine-identical IEEE
+    * doubles. The queries run it as the native codegen'd
+    * [[graft.expressions.DotProduct]] (`dot`); this HOF formulation is
+    * kept for the bit-equality test in LlmOpsSpec. */
   def dotHof(a: Column, b: Column): Column =
     aggregate(
       zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
@@ -104,8 +106,8 @@ object LlmOps {
     * is a byte-range view of the row — no interpreted lambda, no
     * per-token allocation); the HOF formulation is retained as
     * [[shinglesHof]] and pinned bit-equal in LlmOpsSpec. */
-  private def shingles(s: SparkSession, text: Column, k: Int = 5): Column =
-    graft.expressions.NGrams.ngrams(s, text, k, keepDistinct = true, shortWhole = true)
+  private def shingles(text: Column, k: Int = 5): Column =
+    ngrams(text, k, keepDistinct = true, shortWhole = true)
 
   /** Interpreted-HOF shingle formulation — test-only equivalence anchor. */
   def shinglesHof(text: Column, k: Int = 5): Column = {
@@ -147,7 +149,6 @@ object LlmOps {
     // off the scan, NO shuffle (the explode × permutations × groupBy-min
     // relational form is retained test-only as minhashSigExploded and
     // pinned bit-identical in LlmOpsSpec)
-    MinHashSig.register(s)
     // localCheckpoint: the signature table is referenced three times
     // (banding + both sides of the estimate join) — materialize the
     // small (doc, 32×long) frame once instead of re-hashing the corpus
@@ -155,7 +156,7 @@ object LlmOps {
     // pipeline would persist anyway.
     val sigArr = Tables.load(s, dir, "documents")
       .select(col("doc_id"),
-        call_function("graft_minhash_sig", shingles(s, col("text")), lit(numPerm)).as("sig"))
+        minhashSig(shingles(col("text")), numPerm).as("sig"))
       .localCheckpoint(true)
     val bandRows = sigArr.select(col("doc_id"),
         explode(sequence(lit(0), lit(numBands - 1))).as("band"), col("sig"))
@@ -190,7 +191,7 @@ object LlmOps {
     * `graft_minhash_sig` expression used by [[minhashNeardup]]. */
   def minhashSigExploded(s: SparkSession, dir: String, numPerm: Int): DataFrame =
     Tables.load(s, dir, "documents")
-      .select(col("doc_id"), explode(shingles(s, col("text"))).as("tok"))
+      .select(col("doc_id"), explode(shingles(col("text"))).as("tok"))
       .select(col("doc_id"), explode(sequence(lit(0), lit(numPerm - 1))).as("perm"), col("tok"))
       .select(col("doc_id"), col("perm"),
         xxhash64(col("tok"), col("perm").cast("long")).as("h"))
@@ -257,7 +258,6 @@ object LlmOps {
     * baseline (`llm_ann_ivf` is the bucketed scale path). Probe row is
     * broadcast; top-k runs as TakeOrdered, no global sort. */
   def similarityKnn(s: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(s)
     val emb = Tables.load(s, dir, "embeddings")
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
     emb.filter(col("vec_id") =!= 0)
@@ -274,7 +274,6 @@ object LlmOps {
     * Deterministic: argmin tiebreak on centroid id; validated for recall
     * against brute force in LlmOpsSpec. */
   def annIvf(s: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(s)
     val emb = Tables.load(s, dir, "embeddings")
     val cent = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), col("embedding").as("ce"))
@@ -317,7 +316,6 @@ object LlmOps {
     * label block is ≈ 2000 rows); LlmOpsSpec proves the cap path is
     * live. */
   def embedCosineNeardupCapped(s: SparkSession, dir: String, blockCap: Int): DataFrame = {
-    DotProduct.register(s)
     val emb0 = Tables.load(s, dir, "embeddings")
     val smallBlocks = emb0.groupBy("label")
       .agg(count(lit(1)).as("bsz"))
@@ -648,12 +646,11 @@ object LlmOps {
     * semantics (explode of a null array emits no row). fanOut keeps the
     * per-row bit work off a single-row-group scan's one task. */
   private def simhashRaw(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.SimHashBits.register(s)
     Tables.fanOut(Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("text")), col("doc_id"))
       .filter(col("text").isNotNull)
       .select(col("doc_id"),
-        call_function("graft_simhash",
+        SimHashBits.simhash(
           expr("transform(split(text, ' '), t -> xxhash64(t))")).as("simhash"))
   }
 
@@ -664,12 +661,11 @@ object LlmOps {
     * formulations equal); the `llm_simhash` query keeps the 64-sum form
     * because it stays inside whole-stage codegen. */
   def simhashViaAgg(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.SimHashAgg.register(s)
     Tables.load(s, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       .select(col("doc_id"), xxhash64(col("tok")).as("h"))
       .groupBy("doc_id")
-      .agg(call_function("graft_simhash_agg", col("h")).as("simhash"))
+      .agg(simhashAgg(col("h")).as("simhash"))
       .orderBy("doc_id")
   }
 
@@ -697,7 +693,6 @@ object LlmOps {
 
   /** Multimodal join: text row ⋈ vector row on doc_id=vec_id. */
   def multimodalJoin(s: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(s)
     val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
     val emb = Tables.load(s, dir, "embeddings")
     docs.join(emb, docs("doc_id") === emb("vec_id"))
@@ -992,7 +987,6 @@ object LlmOps {
     * result is canonically sortable/hashable by any engine — raw IEEE
     * doubles, positionally deterministic. */
   def normalizeEmbeddings(s: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(s)
     Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")), col("nrm"))
@@ -1201,7 +1195,6 @@ object LlmOps {
   def annIvfKmeansProbed(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    DotProduct.register(s)
     // Spherical IVF: the query ranks by COSINE, so the codebook must
     // partition the unit sphere — cluster UNIT-normalized vectors (L2 on
     // the sphere is monotone in cosine). Clustering raw vectors mixes
@@ -1260,7 +1253,7 @@ object LlmOps {
       col("doc_id"),
       (size(array_distinct(toks)).cast("double") / size(toks).cast("double"))
         .as("distinct_ratio"),
-      graft.expressions.NGrams.ngrams(s, col("text"), 2,
+      ngrams(col("text"), 2,
         keepDistinct = false, shortWhole = false).as("bg"))
       .select(col("doc_id"), col("distinct_ratio"), col("bg"),
         sort_array(col("bg")).as("sbg"))
@@ -1268,8 +1261,7 @@ object LlmOps {
     // multiplicity — native codegen'd expression (the interpreted HOF
     // fold it replaces is kept as topRunHof, pinned bit-equal in
     // LlmOpsSpec)
-    graft.expressions.TopRun.register(s)
-    val top = call_function("graft_top_run", col("sbg"))
+    val top = topRun(col("sbg"))
     staged.select(
         col("doc_id"),
         size(col("bg")).cast("long").as("n_bigrams"),
@@ -1293,7 +1285,7 @@ object LlmOps {
     * partially aggregates on doc_id. */
   def contamination(s: SparkSession, dir: String): DataFrame = {
     val sh = Tables.load(s, dir, "documents")
-      .select(col("doc_id"), col("source"), explode(shingles(s, col("text"), 3)).as("g"))
+      .select(col("doc_id"), col("source"), explode(shingles(col("text"), 3)).as("g"))
     val bench = sh.filter(col("source") === "src0")
       .select("g").distinct().withColumn("hit", lit(1))
     sh.filter(col("source") =!= "src0")
@@ -1365,7 +1357,7 @@ object LlmOps {
     * heavy NGrams pass (measured 5.6 s → 0.56 s at sf0.1). */
   def collocations(s: SparkSession, dir: String): DataFrame = {
     val bc = Tables.load(s, dir, "documents")
-      .select(explode(graft.expressions.NGrams.ngrams(s, col("text"), 2,
+      .select(explode(ngrams(col("text"), 2,
         keepDistinct = false, shortWhole = false)).as("b"))
       .groupBy("b").agg(count(lit(1)).as("cab"))
     val uc = Tables.load(s, dir, "documents")
@@ -1503,7 +1495,7 @@ object LlmOps {
       .select(col("doc_id"), col("text")), col("doc_id"))
       .localCheckpoint(true)
     val sh = docs
-      .select(col("doc_id"), explode(shingles(s, col("text"), 3)).as("g"))
+      .select(col("doc_id"), explode(shingles(col("text"), 3)).as("g"))
     val byShingle = sh.groupBy("g")
       .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
       .filter(size(col("ds")) <= dfCap && size(col("ds")) >= 2)
@@ -1516,7 +1508,7 @@ object LlmOps {
     // corpus (the posting-list build above is the only tokenize pass
     // that shuffles; the two size-join probes read two columns each)
     val sz = docs
-      .select(col("doc_id"), size(shingles(s, col("text"), 3)).cast("long").as("n"))
+      .select(col("doc_id"), size(shingles(col("text"), 3)).cast("long").as("n"))
     val pairs = byShingle.select(explode(pairsOfShingle).as("p"))
       .groupBy(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
       .agg(count(lit(1)).as("shared"))
@@ -1530,7 +1522,7 @@ object LlmOps {
       // everything after it collapses. The one-row min frame broadcasts
       // (the heavy-hitters totals pattern), no driver-side action.
       .join(broadcast(docs
-        .select(size(shingles(s, col("text"), 3)).cast("long").as("n"))
+        .select(size(shingles(col("text"), 3)).cast("long").as("n"))
         .agg(min(col("n")).as("min_n"))))
       .filter(col("shared") * lit(2L) >= col("min_n"))
       .drop("min_n")
@@ -1879,7 +1871,6 @@ object LlmOps {
     * still get exactly k neighbors. */
   def knnGraphCapped(s: SparkSession, dir: String, blockCap: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    DotProduct.register(s)
     val capW = Window.partitionBy("label").orderBy("vec_id")
     val emb = Tables.load(s, dir, "embeddings")
       .withColumn("brank", row_number().over(capW))
@@ -1921,7 +1912,6 @@ object LlmOps {
 
   def knnGraphIvfCapped(s: SparkSession, dir: String, blockCap: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    DotProduct.register(s)
     val capW = Window.partitionBy("cid").orderBy("vec_id")
     val emb = kmeansAssign(s, dir)
       .withColumn("brank", row_number().over(capW))
@@ -2031,7 +2021,6 @@ object LlmOps {
     // concentrate, so ADC needs a deep shortlist for recall 9/10;
     // measured 50→4, 100→7, 150→9 of the true top-10 at sf0.001);
     // clustered real embeddings need a far shallower one.
-    DotProduct.register(s)
     val qv = unit.filter(col("vec_id") === 0).select(col("u").as("qu"))
     unit.join(shortlist, "vec_id")
       .crossJoin(broadcast(qv))
@@ -2064,7 +2053,7 @@ object LlmOps {
   def trigramLm(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tg = Tables.load(s, dir, "documents")
-      .select(explode(graft.expressions.NGrams.ngrams(s, col("text"), 3,
+      .select(explode(ngrams(col("text"), 3,
         keepDistinct = false, shortWhole = false)).as("tg"))
       .select(split(col("tg"), " ").getItem(0).as("w1"),
         split(col("tg"), " ").getItem(1).as("w2"),
@@ -2096,7 +2085,7 @@ object LlmOps {
     * containment-dedup size-probe policy). novelty = novel/total is one
     * double division of two exact integers. */
   def ngramNovelty(s: SparkSession, dir: String): DataFrame = {
-    val grams = graft.expressions.NGrams.ngrams(s, col("text"), 3,
+    val grams = ngrams(col("text"), 3,
       keepDistinct = true, shortWhole = false)
     val novel = Tables.load(s, dir, "documents")
       .select(col("doc_id"), explode(grams).as("g"))
@@ -2142,7 +2131,7 @@ object LlmOps {
 
   def bigramLm(s: SparkSession, dir: String): DataFrame = {
     val bg = Tables.load(s, dir, "documents")
-      .select(explode(graft.expressions.NGrams.ngrams(s, col("text"), 2,
+      .select(explode(ngrams(col("text"), 2,
         keepDistinct = false, shortWhole = false)).as("bg"))
       .select(split(col("bg"), " ").getItem(0).as("w1"),
         split(col("bg"), " ").getItem(1).as("w2"))
@@ -2201,7 +2190,6 @@ object LlmOps {
     Tables.memo(s, dir, "kmeansAssign") {
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
-      DotProduct.register(s)
       val unit = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
         .select(col("vec_id"), col("embedding"),
@@ -2235,7 +2223,6 @@ object LlmOps {
     * a kept lower-id representative in the same cell, recall vs the
     * brute-force pair set is measured and bounded. */
   def semDedup(s: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(s)
     val assign = kmeansAssign(s, dir)
       .select(col("vec_id"), col("cid"),
         transform(col("embedding"), x => x.cast("double")).as("ed"),
@@ -2316,7 +2303,6 @@ object LlmOps {
     * this is the production ANN serving plan. */
   def knnBatch(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    DotProduct.register(s)
     val emb = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("ed"),
@@ -2348,8 +2334,8 @@ object LlmOps {
     * md5 hex min = lexicographic byte compare in both engines. */
   def winnowing(s: SparkSession, dir: String): DataFrame = {
     val k = 5; val w = 4
-    val sh = graft.expressions.NGrams.ngrams(
-      s, col("text"), k, keepDistinct = false, shortWhole = true)
+    val sh = ngrams(
+      col("text"), k, keepDistinct = false, shortWhole = true)
     // The window positions are exploded BEFORE the per-window min so the
     // md5 hash array materializes once per document: with both stages in
     // one projection chain, CollapseProject inlines the hash-array alias
@@ -2379,8 +2365,8 @@ object LlmOps {
     * native n-gram kernel off the scan; the index is one groupBy on the
     * span key — the same plan a 100 TB run shards by span hash. */
   def substringDedup(s: SparkSession, dir: String): DataFrame = {
-    val spans = graft.expressions.NGrams.ngrams(
-      s, col("text"), 8, keepDistinct = true, shortWhole = true)
+    val spans = ngrams(
+      col("text"), 8, keepDistinct = true, shortWhole = true)
     val ex = Tables.load(s, dir, "documents")
       .select(col("doc_id"), explode(spans).as("span"))
     // count, not countDistinct (r19 opt): the span array is generated
@@ -2826,7 +2812,6 @@ object LlmOps {
     annRangeThreshold(s, dir, 0.25)
 
   def annRangeThreshold(s: SparkSession, dir: String, minSim: Double): DataFrame = {
-    DotProduct.register(s)
     val emb = Tables.load(s, dir, "embeddings")
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
     emb.filter(col("vec_id") =!= 0)
@@ -2970,7 +2955,7 @@ object LlmOps {
     * sort. */
   def shingleStats(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
-      .select(explode(shingles(s, col("text"))).as("shingle"))
+      .select(explode(shingles(col("text"))).as("shingle"))
       .groupBy("shingle").agg(count(lit(1)).as("df"))
       .orderBy(col("df").desc, col("shingle"))
       .limit(20)
@@ -3015,7 +3000,6 @@ object LlmOps {
     * candidate count bounded by the cell, not the corpus. Same fixed
     * centroids and deterministic argmin as `llm_ann_ivf`. */
   def annIvfRange(s: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(s)
     val emb = Tables.load(s, dir, "embeddings")
     val cent = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), col("embedding").as("ce"))

@@ -418,7 +418,6 @@ object Streaming {
   private[graft] def neardupStreamCapped(docs: DataFrame, stateCap: Int): DataFrame = {
     val sp = docs.sparkSession
     import sp.implicits._
-    graft.expressions.SimHashBits.register(sp)
     val banded = docs
       .select(col("doc_id"),
         expr("transform(split(text, ' '), t -> xxhash64(t))").as("hs"))
@@ -427,7 +426,7 @@ object Streaming {
       // graft_simhash is one tight pass (pinned equal in StreamingSpec,
       // incl. the null-text → 0 case the coalesce preserves)
       .select(col("doc_id"),
-        coalesce(call_function("graft_simhash", col("hs")), lit(0L)).as("sig"))
+        coalesce(graft.expressions.SimHashBits.simhash(col("hs")), lit(0L)).as("sig"))
       .select(col("doc_id"), col("sig"),
         explode(sequence(lit(0), lit(3))).as("band"))
       .select(col("doc_id"), col("band").cast("int").as("band"),

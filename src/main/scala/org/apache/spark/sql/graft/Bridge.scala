@@ -1,17 +1,27 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.classic.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.classic.{DataFrame, Dataset, ExpressionUtils, SparkSession}
 
 /** Minimal `private[sql]` bridge (the standard extension-library
   * technique: a nested `org.apache.spark.sql` package object grants
   * access to `Dataset.ofRows`, which is how a library turns a custom
-  * [[LogicalPlan]] node into a user-facing DataFrame). Nothing else
-  * from the internal surface is exposed.
+  * [[LogicalPlan]] node into a user-facing DataFrame, and a custom
+  * [[Expression]] into a Column). Nothing else from the internal
+  * surface is exposed.
   */
 object Bridge {
   def ofRows(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan): DataFrame =
     Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
+
+  /** A Column holding a Catalyst [[Expression]] as is — how the engine
+    * reaches its native expressions without the session's function
+    * registry — and the converse, for a builder's Column arguments. */
+  def column(e: Expression): Column = ExpressionUtils.column(e)
+
+  def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Construct Spark's own DataSourceV2 parquet [[Table]] for a path —
     * the delegation target of [[graft.catalog.GraftCatalog]]. Kept here

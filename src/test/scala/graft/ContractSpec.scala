@@ -1,5 +1,6 @@
 package graft
 
+import graft.expressions.GraftExtensions
 import graft.sources.FimiSource
 import org.apache.spark.sql.functions._
 
@@ -703,27 +704,38 @@ class ContractSpec extends SparkSpec {
   }
 
   test("native graft functions resolve and evaluate through SQL text") {
-    graft.expressions.DotProduct.register(spark)
-    graft.expressions.NGrams.register(spark)
-    graft.expressions.TopRun.register(spark)
-    graft.expressions.MinHashSig.register(spark)
-    val r = spark.sql(
+    // GraftExtensions' one list: all six functions, plus the TopK strategy
+    val sqlSession = spark.newSession()
+    GraftExtensions.install(sqlSession)
+    val r = sqlSession.sql(
       """SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d,
         |       graft_top_run(array('a', 'a', 'b')) AS t,
         |       graft_ngrams('x y z', 2, false, false) AS n,
-        |       size(graft_minhash_sig(array('x y'), 8)) AS m""".stripMargin).head()
+        |       size(graft_minhash_sig(array('x y'), 8)) AS m,
+        |       graft_simhash(array(5L)) AS h,
+        |       (SELECT graft_simhash_agg(v) FROM VALUES (5L) AS t(v)) AS a""".stripMargin).head()
     assert(r.getDouble(0) == 11.0)
     assert(r.getLong(1) == 2L)
     assert(r.getSeq[String](2) == Seq("x y", "y z"))
     assert(r.getInt(3) == 8)
+    assert(r.getLong(4) == 5L && r.getLong(5) == 5L)
+    assert(sqlSession.experimental.extraStrategies.contains(graft.plans.TopKStrategy))
   }
 
-  test("GraftExtensions applies cleanly to a fresh SparkSessionExtensions") {
-    // the spark.sql.extensions route a library user configures at
-    // session build — injection must not throw and must register all
-    // six extension points (5 functions + the TopK planner strategy)
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.expressions.GraftExtensions().apply(ext)
+  test("query bodies leave the session's function registry untouched") {
+    // every LLM key (the family that builds native expressions) and the
+    // streaming near-dup transform, on a session nothing was installed in
+    val s = spark.newSession()
+    operators.LlmOps.queries.toSeq.sortBy(_._1).foreach { case (k, q) =>
+      withClue(k) { q(s, sf).collect() }
+    }
+    streaming.Streaming.neardupStream(Tables.load(s, sf, "documents")).collect()
+    val reg = s.sessionState.functionRegistry
+    val names = Seq("graft_dot", "graft_minhash_sig", "graft_simhash",
+      "graft_simhash_agg", "graft_top_run", "graft_ngrams")
+    val present = names.filter(n =>
+      reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    assert(present.isEmpty, s"registered by a query body: ${present.mkString(", ")}")
   }
 
   test("partitioned parquet write enables partition pruning on read") {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.expressions.{DotProduct, GraftExtensions, MinHashSig, NGrams, SimHashBits, TopRun}
 import graft.operators.LlmOps
 import org.apache.spark.sql.functions._
 
@@ -337,18 +338,17 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("native graft_minhash_sig is bit-identical to the exploded relational form") {
-    graft.expressions.MinHashSig.register(spark)
     val docs = Tables.load(spark, sf, "documents")
     val exploded = LlmOps.minhashSigExploded(spark, sf, 32).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toVector).toMap
     import org.apache.spark.sql.functions._
     val sig = docs.select(col("doc_id"),
-        call_function("graft_minhash_sig",
+        MinHashSig.minhashSig(
           when(size(split(col("text"), " ")) >= 5,
             array_distinct(transform(sequence(lit(0), size(split(col("text"), " ")) - lit(5)),
               i => concat_ws(" ", slice(split(col("text"), " "), i + lit(1), lit(5))))))
             .otherwise(array(col("text"))),
-          lit(32)).as("sig"))
+          32).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toVector).toMap
     assert(sig == exploded)
   }
@@ -396,7 +396,6 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("native graft_simhash matches the HOF formulation on edge cases") {
-    graft.expressions.SimHashBits.register(spark)
     import org.apache.spark.sql.functions._
     // ties (2*ones == n must NOT set the bit), empty array (sig 0),
     // all-bits element, null elements (count toward the total, never
@@ -412,7 +411,7 @@ class LlmOpsSpec extends SparkSpec {
         |  (6, CAST(NULL AS ARRAY<BIGINT>))
         |AS t(id, hs)""".stripMargin)
     val got = rows.select(col("id"),
-        coalesce(call_function("graft_simhash", col("hs")), lit(0L)).as("sig"),
+        coalesce(SimHashBits.simhash(col("hs")), lit(0L)).as("sig"),
         expr(graft.streaming.Streaming.SimhashFromHashesSql).as("ref"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     got.foreach { case (id, sig, ref) =>
@@ -517,23 +516,40 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("native graft_dot is bit-identical to the HOF fold") {
-    graft.expressions.DotProduct.register(spark)
     val emb = Tables.load(spark, sf, "embeddings")
     val diffs = emb.select(
-        call_function("graft_dot", col("embedding"), col("embedding")).as("native"),
+        DotProduct.dot(col("embedding"), col("embedding")).as("native"),
         LlmOps.dotHof(col("embedding"), col("embedding")).as("hof"))
       .filter(col("native") =!= col("hof"))
       .count()
     assert(diffs == 0)
   }
 
+  test("graft_dot codegen for non-nullable inputs equals interpreted") {
+    // neither the arrays nor their elements can be null, so the
+    // expression is non-nullable and codegen declares no isNull variable
+    def run(confs: (String, String)*): Seq[Double] = {
+      val s = spark.newSession()
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      val v = array(col("id").cast("double"), lit(2.0))
+      val df = s.range(5).select(DotProduct.dot(v, v).as("d"))
+      assert(!df.schema("d").nullable)
+      df.collect().map(_.getDouble(0)).toSeq
+    }
+    val compiled = run("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    val interpreted = run("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")
+    assert(compiled == interpreted)
+    assert(compiled == (0 until 5).map(i => i * i + 4.0))
+  }
+
   test("expression edges: dot null-element propagates, ngrams rejects bad args, empty minhash is null") {
-    graft.expressions.DotProduct.register(spark)
-    graft.expressions.NGrams.register(spark)
-    graft.expressions.MinHashSig.register(spark)
+    val sqlSession = spark.newSession()
+    GraftExtensions.install(sqlSession)
     // a NULL element nulls the product, matching the HOF's null
     // propagation (a zeroed slot would silently read as 0.0)
-    val row = spark.sql(
+    val row = sqlSession.sql(
       "SELECT graft_dot(array(1.0D, CAST(NULL AS DOUBLE)), array(2.0D, 3.0D)) d")
       .collect().head
     assert(row.isNullAt(0), s"expected NULL, got $row")
@@ -544,7 +560,7 @@ class LlmOpsSpec extends SparkSpec {
       "SELECT graft_ngrams('a b', 0, true, true)",
       "SELECT graft_ngrams('a b', CAST(NULL AS INT), true, true)",
       "SELECT graft_ngrams('a b', 2)").foreach { q =>
-      val e = intercept[Exception](spark.sql(q).collect())
+      val e = intercept[Exception](sqlSession.sql(q).collect())
       def chain(t: Throwable): Seq[String] =
         if (t == null) Nil else t.getMessage +: chain(t.getCause)
       assert(chain(e).exists(m => m != null && m.contains("graft_ngrams")),
@@ -552,7 +568,7 @@ class LlmOpsSpec extends SparkSpec {
     }
     // empty/all-null token arrays have NO signature (a MaxValue sentinel
     // vector would make all empty docs perfect LSH near-dups)
-    val mh = spark.sql(
+    val mh = sqlSession.sql(
       """SELECT graft_minhash_sig(CAST(array() AS ARRAY<STRING>), 8) a,
         |       graft_minhash_sig(array(CAST(NULL AS STRING)), 8) b,
         |       graft_minhash_sig(array('x'), 8) c""".stripMargin).collect().head
@@ -813,11 +829,10 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("native graft_ngrams is element-identical to the HOF shingle/bigram forms") {
-    graft.expressions.NGrams.register(spark)
     // distinct shingles, k=3 and k=5, incl. short-doc whole-text branch
     for (k <- Seq(3, 5)) {
       val both = Tables.load(spark, sf, "documents").select(
-          call_function("graft_ngrams", col("text"), lit(k), lit(true), lit(true)).as("native"),
+          NGrams.ngrams(col("text"), k, true, true).as("native"),
           LlmOps.shinglesHof(col("text"), k).as("hof"))
         .collect()
       both.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1), s"k=$k"))
@@ -825,7 +840,7 @@ class LlmOpsSpec extends SparkSpec {
     // non-distinct bigrams, short docs -> empty
     val toks = split(col("text"), " ")
     val bg = Tables.load(spark, sf, "documents").select(
-        call_function("graft_ngrams", col("text"), lit(2), lit(false), lit(false)).as("native"),
+        NGrams.ngrams(col("text"), 2, false, false).as("native"),
         when(size(toks) >= 2,
           transform(sequence(lit(1), size(toks) - 1),
             i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1))))
@@ -838,13 +853,13 @@ class LlmOpsSpec extends SparkSpec {
     val edges = Seq("", "solo", "a b", "a  b", " a b ", "a a a a a a")
       .toDF("text")
     val eq = edges.select(col("text"),
-        call_function("graft_ngrams", col("text"), lit(2), lit(false), lit(false)).as("n2"),
+        NGrams.ngrams(col("text"), 2, false, false).as("n2"),
         when(size(split(col("text"), " ")) >= 2,
           transform(sequence(lit(1), size(split(col("text"), " ")) - 1),
             i => concat_ws(" ", element_at(split(col("text"), " "), i),
               element_at(split(col("text"), " "), i + 1))))
           .otherwise(array().cast("array<string>")).as("h2"),
-        call_function("graft_ngrams", col("text"), lit(5), lit(true), lit(true)).as("n5"),
+        NGrams.ngrams(col("text"), 5, true, true).as("n5"),
         LlmOps.shinglesHof(col("text"), 5).as("h5"))
       .collect()
     eq.foreach { r =>
@@ -854,7 +869,6 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("native graft_top_run is bit-identical to the HOF fold on real bigram arrays") {
-    graft.expressions.TopRun.register(spark)
     val toks = split(col("text"), " ")
     val arrays = Tables.load(spark, sf, "documents").select(
       col("doc_id"),
@@ -863,7 +877,7 @@ class LlmOpsSpec extends SparkSpec {
           i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1))))
         .otherwise(array().cast("array<string>"))).as("sbg"))
     val both = arrays.select(col("doc_id"),
-        call_function("graft_top_run", col("sbg")).as("native"),
+        TopRun.topRun(col("sbg")).as("native"),
         LlmOps.topRunHof(col("sbg")).as("hof"),
         size(col("sbg")).as("n"))
       .collect()
@@ -880,7 +894,7 @@ class LlmOpsSpec extends SparkSpec {
       (Seq("a", "a", "a"), 3L),
       (Seq("a", "b", "c"), 1L),
       (Seq("a", "a", "b", "b", "b"), 3L)).toDF("arr", "expect")
-    edge.select(call_function("graft_top_run", col("arr")).as("got"), col("expect"))
+    edge.select(TopRun.topRun(col("arr")).as("got"), col("expect"))
       .collect().foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
 

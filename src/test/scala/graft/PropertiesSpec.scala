@@ -293,7 +293,6 @@ class PropertiesSpec extends SparkSpec {
     }
   }
   test("graft_ngrams matches a reference implementation on random strings") {
-    graft.expressions.NGrams.register(spark)
     val sp = spark
     import sp.implicits._
     // random texts over a tiny alphabet with deliberate doubled/leading/
@@ -314,7 +313,7 @@ class PropertiesSpec extends SparkSpec {
     val df = texts.toDF("text")
     for ((k, d, w) <- Seq((2, false, false), (3, true, true), (5, true, true), (1, true, false))) {
       val got = df.select(col("text"),
-          call_function("graft_ngrams", col("text"), lit(k), lit(d), lit(w)).as("g"))
+          graft.expressions.NGrams.ngrams(col("text"), k, d, w).as("g"))
         .collect().map(r => r.getString(0) -> r.getSeq[String](1).toSeq).toMap
       texts.distinct.foreach { t =>
         assert(got(t) == reference(t, k, d, w), s"text='$t' k=$k distinct=$d whole=$w")

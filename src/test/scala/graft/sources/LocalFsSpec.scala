@@ -9,7 +9,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumException, FileContext, FileStatus, FileSystem, Path,
   RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The java.nio `file:` FileSystem answers as stock Hadoop does. Both are
@@ -85,10 +84,7 @@ class LocalFsSpec extends AnyFunSuite {
   }
 
   test("a session built through EngineConf.tune resolves file: to the java.nio classes") {
-    val spark = graft.EngineConf.tune(SparkSession.builder()
-      .master("local[1]")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.EngineConf.session(1)
     try {
       val hconf = spark.sessionState.newHadoopConf()
       val fs = FileSystem.newInstance(URI.create("file:///"), hconf)

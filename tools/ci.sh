@@ -38,7 +38,7 @@ python3 tools/check.py "$SF" "$OUT"
 
 if [[ $FULL -eq 1 ]]; then
   echo "[ci] entry smoke"
-  sbt -batch "runMain graft.Smoke" | grep -q "pass=true"
+  sbt -batch "runMain graft.Dev smoke" | grep -q "pass=true"
   echo "[ci] scalatest suite"
   sbt -batch test
   echo "[ci] traced table_io benchmark: result fingerprints and storage checks"
