@@ -722,6 +722,26 @@ class ContractSpec extends SparkSpec {
     assert(sqlSession.experimental.extraStrategies.contains(graft.plans.TopKStrategy))
   }
 
+  test("GraftExtensions applies cleanly to a fresh SparkSessionExtensions") {
+    // the spark.sql.extensions route a library user configures at
+    // session build — injection must not throw and must register all
+    // seven extension points (6 functions + the TopK planner strategy)
+    val fns = scala.collection.mutable.ArrayBuffer.empty[String]
+    var strategies = 0
+    val ext = new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: org.apache.spark.sql.SparkSessionExtensions#FunctionDescription): Unit = {
+        fns += f._1.funcName; super.injectFunction(f)
+      }
+      override def injectPlannerStrategy(b: org.apache.spark.sql.SparkSessionExtensions#StrategyBuilder): Unit = {
+        strategies += 1; super.injectPlannerStrategy(b)
+      }
+    }
+    new GraftExtensions().apply(ext)
+    assert(fns.toSet == Set("graft_dot", "graft_minhash_sig", "graft_simhash",
+      "graft_simhash_agg", "graft_top_run", "graft_ngrams"))
+    assert(fns.size == 6 && strategies == 1)
+  }
+
   test("query bodies leave the session's function registry untouched") {
     // every LLM key (the family that builds native expressions) and the
     // streaming near-dup transform, on a session nothing was installed in
