@@ -16,13 +16,13 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Session-scoped memo for shared derived tables (e.g. the exploded
-    * transaction table every mining query starts from). A real pipeline
-    * materializes these once; queries sharing one session reuse the
-    * persisted copy instead of re-deriving the join+distinct each time.
-    * Keyed by session identity so a fresh session never sees stale plans. */
-  private val memoCache =
-    scala.collection.concurrent.TrieMap[(String, String, String), DataFrame]()
+  /** The one per-session cache: every derived frame, fitted model and
+    * planning verdict a query reuses within a session, keyed by
+    * (session tag, dir, key). A real pipeline derives these once; queries
+    * sharing one session reuse the stored value instead of re-deriving
+    * it, and a fresh session never sees another session's values. */
+  private val sessionCache =
+    scala.collection.concurrent.TrieMap[(String, String, String), Any]()
 
   /** Stable per-session key: a fresh UUID minted on first sight of each
     * live session and held in a WEAK-keyed map — unlike
@@ -39,13 +39,20 @@ object Tables {
       else { val u = java.util.UUID.randomUUID().toString; sessionTags.put(spark, u); u }
     }
 
-  def memo(spark: SparkSession, dir: String, key: String)(build: => DataFrame): DataFrame = {
+  /** The value `build` returns, built once per (session, dir, key). The
+    * key must name everything the value depends on besides the session
+    * and `dir`. */
+  def sessionValue[T](spark: SparkSession, dir: String, key: String)(build: => T): T = {
     val tag = sessionTag(spark)
     touch(tag)
-    memoCache.getOrElseUpdate(
-      (tag, dir, key),
-      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    sessionCache.getOrElseUpdate((tag, dir, key), build).asInstanceOf[T]
   }
+
+  /** [[sessionValue]] of a persisted frame: shared derived tables (e.g.
+    * the exploded transaction table every mining query starts from). */
+  def memo(spark: SparkSession, dir: String, key: String)(build: => DataFrame): DataFrame =
+    sessionValue(spark, dir, key)(
+      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** SESSION-RETENTION bound (r15 VERDICT #3): a memoized DataFrame
     * strongly references its SparkSession, so a cache that only ever
@@ -57,8 +64,8 @@ object Tables {
     * their frames unpersisted, making that session reachable only by
     * its owner (GC-collectable once dropped). Active sessions are never
     * evicted by their own use — only by MaxMemoSessions NEWER sessions
-    * arriving, in which case the evicted session's next memo call
-    * simply rebuilds (a perf, never a correctness, event). */
+    * arriving, in which case the evicted session's next call simply
+    * rebuilds (a perf, never a correctness, event). */
   private val MaxMemoSessions = 8
   private val touchCounter = new java.util.concurrent.atomic.AtomicLong(0L)
   private val tagTouch = scala.collection.concurrent.TrieMap.empty[String, Long]
@@ -67,60 +74,33 @@ object Tables {
     while (tagTouch.size > MaxMemoSessions) {
       val oldest = tagTouch.minBy(_._2)._1
       tagTouch.remove(oldest)
-      memoCache.keys.filter(_._1 == oldest).foreach { k =>
-        memoCache.remove(k).foreach { df =>
-          try df.unpersist() catch { case _: Throwable => () }
+      sessionCache.keys.filter(_._1 == oldest).foreach { k =>
+        sessionCache.remove(k).foreach {
+          case df: org.apache.spark.sql.Dataset[_] =>
+            try df.unpersist() catch { case _: Throwable => () }
+          case _ => ()
         }
       }
-      scanWidthCache.keys.filter(_._1 == oldest).foreach(scanWidthCache.remove)
     }
   }
 
   /** Test hooks for the retention spec. */
-  private[graft] def memoSessionCount: Int = tagTouch.size
-  private[graft] def memoEntryCount: Int = memoCache.size
+  private[graft] def sessionCount: Int = tagTouch.size
+  private[graft] def sessionEntryCount: Int = sessionCache.size
 
   // ------------------------------------------------- persisted indexes
 
-  /** PERSISTED index store (r15 VERDICT task 6): [[memo]] keeps a
-    * derived frame for one session; [[index]] additionally spills it to
-    * a VERSIONED parquet directory keyed by a fingerprint of the source
-    * tables, so the next JVM loads the artifact instead of re-deriving
-    * it — `warm_s` becomes a one-time cost per corpus snapshot, not a
-    * per-process cost. This is the maintained-index lifecycle a real
-    * deployment runs (train/derive once per snapshot, serve from the
-    * materialization): minhash signatures, codebooks, component labels,
-    * mined itemsets, selection scaffolds.
-    *
-    * Layout: `<root>/<dirHash>/<key>__<fingerprint>/` (plain parquet).
-    * The fingerprint hashes every source parquet file's (name, length,
-    * mtime) plus [[IndexFormatVersion]] — any data change or format bump
-    * yields a NEW path, so stale artifacts can never be served
-    * (invalidation is structural, not advisory). Writes are atomic
-    * (build → temp dir → rename); a concurrent builder of the same
-    * fingerprint loses the rename race and reads the winner's copy.
-    * Stale fingerprints of the same key are dropped best-effort after a
-    * successful write.
-    *
-    * Root: `$SPARK_GRAFT_INDEX_DIR`, default `<tmpdir>/graft_index`;
-    * set to `off` to disable persistence (pure [[memo]] behavior).
-    * Frames whose schema contains a non-SQL type (e.g. an ml UDT) are
-    * memoized but not persisted — a parquet round-trip would drop the
-    * UDT wrapper.
-    *
-    * Correctness stance: builds are deterministic by this repo's
-    * determinism rules, and parquet round-trips values exactly, so a
-    * loaded index is VALUE-identical to a fresh build; only physical
-    * row order/partitioning may differ, which no downstream consumer
-    * depends on (every declared key orders its own output). The sf-dir
-    * fingerprint guard is spec-gated in ContractSpec. */
+  /** Bumped when the stored format of an index or artifact changes; it
+    * rides every [[fingerprint]]. */
   val IndexFormatVersion = 1
 
   /** Test hook: overrides the SPARK_GRAFT_INDEX_DIR resolution (env
     * vars cannot change within a JVM). */
   private[graft] var indexRootOverride: Option[Option[String]] = None
 
-  private def indexRoot: Option[String] =
+  /** The disk store's root: `$SPARK_GRAFT_INDEX_DIR`, default
+    * `<tmpdir>/graft_index`; `off` disables persistence. */
+  private[graft] def indexRoot: Option[String] =
     indexRootOverride.getOrElse(sys.env.get("SPARK_GRAFT_INDEX_DIR") match {
       case Some("off") | Some("0") | Some("") => None
       case Some(p) => Some(p)
@@ -171,13 +151,29 @@ object Tables {
     }
   }
 
-  /** NON-DataFrame artifact flavor of [[index]] (learned models: the
-    * IVF k-means codebook, the PQ subspace codebooks, the BPE rule
-    * list). Same layout, fingerprint, atomic publish and stale-drop;
-    * the caller provides how to `save` a built value into a directory
-    * and how to `load` one back. Returns the built value on a miss
-    * (no reload round-trip — save/load is value-faithful by contract). */
-  private[graft] def artifact[T](dir: String, key: String)(build: => T)(
+  /** The PERSISTED store behind [[index]] and [[artifact]] (r15 VERDICT
+    * task 6): a derived value is spilled to a VERSIONED directory keyed
+    * by a fingerprint of the source tables, so the next JVM loads it
+    * instead of re-deriving it — a one-time cost per corpus snapshot,
+    * not a per-process cost. This is the maintained-index lifecycle a
+    * real deployment runs (train/derive once per snapshot, serve from
+    * the materialization).
+    *
+    * Layout: `<root>/<dirHash>/<key>__<fingerprint>/`. Any data change
+    * or format bump yields a NEW path, so stale artifacts can never be
+    * served (invalidation is structural, not advisory). Writes are
+    * atomic (`save` into a temp dir → rename); a concurrent builder of
+    * the same fingerprint loses the rename race and uses the winner's
+    * copy. Persistence is BEST-EFFORT end to end: an unreadable stored
+    * copy (torn write, concurrent cleanup) is dropped and rebuilt, and
+    * an unwritable root (disk full, bad SPARK_GRAFT_INDEX_DIR) degrades
+    * to the built value, never failing the query. Superseded
+    * fingerprints of the key are swept on every hit and publish.
+    *
+    * A miss returns the built value, or with `readBack` the `load` of
+    * the published copy. `save` may write nothing, which keeps that
+    * value out of the store. */
+  private def stored[T](dir: String, key: String, readBack: Boolean)(build: => T)(
       save: (T, String) => Unit)(load: String => T): T =
     indexRoot match {
       case None => build
@@ -186,14 +182,13 @@ object Tables {
         val safeKey = key.replaceAll("[^a-zA-Z0-9_.-]", "_")
         val parent = new java.io.File(root, dh)
         val kdir = new java.io.File(parent, s"${safeKey}__${fingerprint(dir)}")
-        // Load is best-effort too: a torn/corrupt stored copy (or one a
-        // concurrent cleanup deleted between isDirectory and load)
-        // rebuilds instead of throwing.
         val loaded: Option[T] =
           if (kdir.isDirectory)
             try Some(load(kdir.getAbsolutePath))
             catch {
               case scala.util.control.NonFatal(_) =>
+                // drop it so the rebuild below can publish (its rename
+                // would collide otherwise)
                 try rmTree(kdir) catch { case _: Throwable => () }
                 None
             }
@@ -211,10 +206,17 @@ object Tables {
               s".${kdir.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
             try {
               save(v, tmp.getAbsolutePath)
-              if (!tmp.renameTo(kdir)) rmTree(tmp)
-              if (kdir.isDirectory) dropStale(parent, safeKey, kdir.getName)
-            } catch { case _: Throwable => rmTree(tmp) } // persistence is best-effort
-            v
+              if (!tmp.renameTo(kdir)) rmTree(tmp) // concurrent winner, or nothing saved
+              if (!kdir.isDirectory) v
+              else {
+                dropStale(parent, safeKey, kdir.getName)
+                if (readBack) load(kdir.getAbsolutePath) else v
+              }
+            } catch {
+              case scala.util.control.NonFatal(_) =>
+                try rmTree(tmp) catch { case _: Throwable => () }
+                v
+            }
         }
     }
 
@@ -224,10 +226,8 @@ object Tables {
     * deleting it immediately would fail that reader mid-scan. Stale dirs
     * are therefore only removed once older than this window — retention,
     * not correctness (a stale FINGERPRINT is never *served*, only kept
-    * on disk briefly for in-flight readers). */
-  private[graft] var indexStaleGraceMs: Long =
-    sys.env.get("SPARK_GRAFT_INDEX_GRACE_MS").map(_.toLong)
-      .getOrElse(15L * 60 * 1000)
+    * on disk briefly for in-flight readers). Only tests change it. */
+  private[graft] var indexStaleGraceMs: Long = 15L * 60 * 1000
 
   /** Best-effort removal of this key's superseded fingerprint dirs
     * (everything matching `<key>__*` except `current`), age-gated by
@@ -241,58 +241,35 @@ object Tables {
       .foreach(rmTree)
   }
 
+  /** A [[memo]] whose frame is also [[stored]] as plain parquet
+    * (minhash signatures, component labels, mined itemsets, selection
+    * scaffolds). A miss builds, writes and memoizes the read-back of the
+    * published copy, so the memo persists parquet, not the build's
+    * lineage. Frames whose schema holds a non-SQL type (e.g. an ml UDT)
+    * are memoized but not stored — a parquet round-trip would drop the
+    * UDT wrapper.
+    *
+    * Correctness stance: builds are deterministic by this repo's
+    * determinism rules, and parquet round-trips values exactly, so a
+    * loaded index is VALUE-identical to a fresh build; only physical
+    * row order/partitioning may differ, which no downstream consumer
+    * depends on (every declared key orders its own output). The sf-dir
+    * fingerprint guard is spec-gated in ContractSpec. */
   def index(spark: SparkSession, dir: String, key: String)(build: => DataFrame): DataFrame =
     memo(spark, dir, key) {
-      indexRoot match {
-        case None => build
-        case Some(root) =>
-          val dh = sha(new java.io.File(dir).getAbsolutePath).take(12)
-          val safeKey = key.replaceAll("[^a-zA-Z0-9_.-]", "_")
-          val parent = new java.io.File(root, dh)
-          val kdir = new java.io.File(parent, s"${safeKey}__${fingerprint(dir)}")
-          // Persistence is BEST-EFFORT end to end (the artifact contract):
-          // an unreadable stored copy (torn write, concurrent cleanup) or
-          // an unwritable root (disk full, bad SPARK_GRAFT_INDEX_DIR) must
-          // degrade to plain memo behavior, never fail the query.
-          val loaded: Option[DataFrame] =
-            if (kdir.isDirectory)
-              try Some(spark.read.parquet(kdir.getAbsolutePath))
-              catch {
-                case scala.util.control.NonFatal(_) =>
-                  // unreadable stored copy: drop it so the rebuild below
-                  // can publish (its rename would collide otherwise)
-                  try rmTree(kdir) catch { case _: Throwable => () }
-                  None
-              }
-            else None
-          loaded match {
-            case Some(df) =>
-              // hit path sweeps superseded fingerprints too (r17
-              // ADVICE) — see artifact()'s identical rationale
-              dropStale(parent, safeKey, kdir.getName)
-              df
-            case None =>
-            val built = build
-            if (!built.schema.fields.forall(f => sqlOnly(f.dataType))) built
-            else {
-              val tmp = new java.io.File(parent,
-                s".${kdir.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-              try {
-                built.write.mode("overwrite").parquet(tmp.getAbsolutePath)
-                if (!tmp.renameTo(kdir)) rmTree(tmp) // concurrent winner (or failure)
-                if (kdir.isDirectory) {
-                  dropStale(parent, safeKey, kdir.getName)
-                  spark.read.parquet(kdir.getAbsolutePath)
-                } else built
-              } catch {
-                case scala.util.control.NonFatal(_) =>
-                  try rmTree(tmp) catch { case _: Throwable => () }
-                  built // best-effort
-              }
-            }
-          }
-      }
+      stored(dir, key, readBack = true)(build) { (df, path) =>
+        if (sqlOnly(df.schema)) df.write.mode("overwrite").parquet(path)
+      }(spark.read.parquet(_))
     }
+
+  /** A [[sessionValue]] that is also [[stored]]: learned models (the IVF
+    * k-means codebook, the PQ subspace codebooks, the BPE rule list).
+    * The caller provides how to `save` a built value into a directory
+    * and how to `load` one back; a miss returns the built value (no
+    * reload round-trip — save/load is value-faithful by contract). */
+  private[graft] def artifact[T](spark: SparkSession, dir: String, key: String)(build: => T)(
+      save: (T, String) => Unit)(load: String => T): T =
+    sessionValue(spark, dir, key)(stored(dir, key, readBack = false)(build)(save)(load))
 
   /** Per-SESSION scratch directory for queries that materialize work
     * tables (fimi round-trips, snapshot/time-travel rebuilds, format
@@ -347,13 +324,6 @@ object Tables {
     f.delete(): Unit
   }
 
-  /** Column names declared TIMESTAMP(NANOS) in the parquet footer of
-    * `path` (a single file or a directory of part files — one footer is
-    * representative because one writer produced the dataset). Footer-level
-    * detection lets the ns→µs repair apply to ANY table/column a future
-    * generator emits, instead of special-casing events.ts, and lets us
-    * distinguish a genuine long column from a nanos timestamp that
-    * `nanosAsLong` surfaced as LongType. */
   /** Footer-probe cache (r19 opt): [[load]] runs once per table
     * REFERENCE, so the NANOS-column probe otherwise re-opens a parquet
     * footer on every call — pure driver-side I/O repeated hundreds of
@@ -364,6 +334,13 @@ object Tables {
   private val nanosColsCache =
     scala.collection.concurrent.TrieMap[(String, Long, Long), Set[String]]()
 
+  /** Column names declared TIMESTAMP(NANOS) in the parquet footer of
+    * `path` (a single file or a directory of part files — one footer is
+    * representative because one writer produced the dataset). Footer-level
+    * detection lets the ns→µs repair apply to ANY table/column a future
+    * generator emits, instead of special-casing events.ts, and lets us
+    * distinguish a genuine long column from a nanos timestamp that
+    * `nanosAsLong` surfaced as LongType. */
   private def nanosTimestampCols(spark: SparkSession, path: String): Set[String] =
     nanosColsCache.getOrElseUpdate(fileId(path), nanosTimestampColsUncached(spark, path))
 
@@ -441,33 +418,17 @@ object Tables {
     * stays on the scan tasks, and the plan is byte-identical. Apply it
     * only where the first stage does real per-row compute — for cheap
     * scans the exchange costs more than the serialism. */
-  /** Scan-width decisions, keyed by (session UUID, input file set,
-    * cores): the narrow/wide answer depends only on the LEAF scan's
-    * split count — identical for every projection of the same files —
-    * but reading it via `df.rdd.getNumPartitions` forces a full
-    * physical planning + RDD-conversion pass, so pay that once per file
-    * set per session, not once per caller (r13 ADVICE). The key holds
-    * FULL values (no int hashes — r14 ADVICE: a 32-bit collision would
-    * silently replay the other file set's narrow/wide verdict), and the
-    * session UUID cannot be reused after GC the way identityHashCode
-    * can. Static split counts are what AQE itself starts from — AQE
-    * re-plans SHUFFLE partitioning at runtime, never file-scan splits,
-    * so the cached decision cannot drift from execution. */
-  private val scanWidthCache =
-    scala.collection.concurrent.TrieMap[(String, Seq[String], Int), Boolean]()
-
   def fanOut(df: DataFrame, by: org.apache.spark.sql.Column*): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
     val files = df.inputFiles
+    // Reading the split count plans the whole frame (r13 ADVICE), so the
+    // verdict is kept per (session, file set, cores); AQE never re-plans
+    // scan splits. NUL cannot occur in a path, so the key holds the full
+    // file list.
     val wide =
       if (files.isEmpty) df.rdd.getNumPartitions >= cores // non-file input: no stable key
-      else {
-        val tag = sessionTag(df.sparkSession)
-        touch(tag)
-        scanWidthCache.getOrElseUpdate(
-          (tag, files.toSeq, cores),
-          df.rdd.getNumPartitions >= cores)
-      }
+      else sessionValue(df.sparkSession, "fanOut", (cores +: files).mkString("\u0000"))(
+        df.rdd.getNumPartitions >= cores)
     if (wide) df
     // Prefer hash-partitioning on the downstream grouping keys: it skips
     // round-robin's local sort-before-repartition (retry determinism

@@ -1169,28 +1169,22 @@ object LlmOps {
   def annIvfKmeans(s: SparkSession, dir: String): DataFrame =
     annIvfKmeansProbed(s, dir, nprobe = 4)
 
-  /** Codebook cache: the IVF index is built ONCE per (session, corpus)
-    * — a real deployment trains and persists the codebook; queries only
-    * assign + search. Keyed by session identity like Tables.memo. */
-  private val kmeansCache =
-    scala.collection.concurrent.TrieMap[(Int, String), org.apache.spark.ml.clustering.KMeansModel]()
-
-  /** The shared spherical k-means codebook: per-session cached AND
-    * persisted through [[Tables.artifact]] (ml's own save/load — exact
-    * centroid round-trip), so a cold JVM loads the trained index
-    * instead of re-fitting it. Seeded fit ⇒ the persisted model is the
-    * model a rebuild would produce. */
+  /** The shared spherical k-means codebook, built ONCE per (session,
+    * corpus) — a real deployment trains and persists the codebook;
+    * queries only assign + search. Persisted through [[Tables.artifact]]
+    * (ml's own save/load — exact centroid round-trip), so a cold JVM
+    * loads the trained index instead of re-fitting it. Seeded fit ⇒ the
+    * persisted model is the model a rebuild would produce. */
   private def sphericalCodebook(
       s: SparkSession, dir: String,
       feat: DataFrame): org.apache.spark.ml.clustering.KMeansModel =
-    kmeansCache.getOrElseUpdate((System.identityHashCode(s), dir),
-      Tables.artifact(dir, "kmeansCodebook") {
-        new org.apache.spark.ml.clustering.KMeans()
-          .setK(8).setSeed(42L).setMaxIter(20)
-          .setFeaturesCol("fv").setPredictionCol("cid")
-          .fit(feat)
-      }((m, path) => m.write.save(path))(
-        org.apache.spark.ml.clustering.KMeansModel.load))
+    Tables.artifact(s, dir, "kmeansCodebook") {
+      new org.apache.spark.ml.clustering.KMeans()
+        .setK(8).setSeed(42L).setMaxIter(20)
+        .setFeaturesCol("fv").setPredictionCol("cid")
+        .fit(feat)
+    }((m, path) => m.write.save(path))(
+      org.apache.spark.ml.clustering.KMeansModel.load)
 
   def annIvfKmeansProbed(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
@@ -1934,14 +1928,6 @@ object LlmOps {
       .orderBy("src", "rank")
   }
 
-  /** Per-(session, corpus) product-quantization codebooks: M=8 seeded
-    * k-means models, one per 8-dim subspace of the unit-normalized
-    * vectors — trained once like the IVF codebook (warm() absorbs the
-    * fits), then reused by every encode/search call. */
-  private val pqCache =
-    scala.collection.concurrent.TrieMap[(Int, String),
-      Seq[org.apache.spark.ml.clustering.KMeansModel]]()
-
   private val PqM = 8          // subspaces
   private val PqSubDim = 8     // dims per subspace (8×8 = 64)
   private val PqK = 16         // centroids per subspace
@@ -1971,21 +1957,23 @@ object LlmOps {
     val subCols = (0 until PqM).map(m =>
       slice(col("u"), m * PqSubDim + 1, PqSubDim).as(s"sub$m"))
     val subbed = unit.select(col("vec_id") +: subCols: _*)
-    // per-subspace codebooks: session-cached and persisted (one ml
-    // save/load per subspace under a single artifact dir)
-    val models = pqCache.getOrElseUpdate((System.identityHashCode(s), dir),
-      Tables.artifact(dir, "pqCodebooks") {
-        (0 until PqM).map { m =>
-          new KMeans().setK(PqK).setSeed(42L + m).setMaxIter(20)
-            .setFeaturesCol("fv").setPredictionCol("code")
-            .fit(subbed.select(array_to_vector(col(s"sub$m")).as("fv")))
-        }
-      } { (ms, path) =>
-        ms.zipWithIndex.foreach { case (m, i) => m.write.save(s"$path/m$i") }
-      } { path =>
-        (0 until PqM).map(i =>
-          org.apache.spark.ml.clustering.KMeansModel.load(s"$path/m$i"))
-      })
+    // Per-(session, corpus) product-quantization codebooks: M=8 seeded
+    // k-means models, one per 8-dim subspace of the unit-normalized
+    // vectors — trained once like the IVF codebook (warm() absorbs the
+    // fits), then reused by every encode/search call; persisted as one
+    // ml save/load per subspace under a single artifact dir.
+    val models = Tables.artifact(s, dir, "pqCodebooks") {
+      (0 until PqM).map { m =>
+        new KMeans().setK(PqK).setSeed(42L + m).setMaxIter(20)
+          .setFeaturesCol("fv").setPredictionCol("code")
+          .fit(subbed.select(array_to_vector(col(s"sub$m")).as("fv")))
+      }
+    } { (ms, path) =>
+      ms.zipWithIndex.foreach { case (m, i) => m.write.save(s"$path/m$i") }
+    } { path =>
+      (0 until PqM).map(i =>
+        org.apache.spark.ml.clustering.KMeansModel.load(s"$path/m$i"))
+    }
     // encode: one assignment column per subspace
     val encoded = (0 until PqM).foldLeft(subbed) { (df, m) =>
       models(m).setFeaturesCol(s"fv$m").setPredictionCol(s"code$m")
@@ -2480,44 +2468,40 @@ object LlmOps {
     * index artifact trained once per corpus snapshot and reused by the
     * encode pass (same cache policy as the FPGrowth model and the IVF
     * codebook). */
-  private val bpeRulesCache =
-    scala.collection.concurrent.TrieMap[(Int, String), Seq[(String, String)]]()
-
   private def bpeRules(s: SparkSession, dir: String): Seq[(String, String)] =
-    bpeRulesCache.getOrElseUpdate((System.identityHashCode(s), dir),
-      Tables.artifact(dir, "bpeRules") {
-        bpeTrain(s, dir).collect().map(r => (r.getString(1), r.getString(2))).toSeq
-      } { (rules, path) =>
-        // rank order IS the artifact: a count header then one line per
-        // rule, tab-separated with \\ \t \n ESCAPED (a symbol is
-        // arbitrary text — unescaped delimiters would silently corrupt
-        // the ruleset on reload), so load can verify structure exactly
-        val f = new java.io.File(path)
-        f.mkdirs()
-        val body = (s"graft-bpe-v2 ${rules.size}" +:
-          rules.map { case (l, r) => s"${bpeEsc(l)}\t${bpeEsc(r)}" })
-          .mkString("\n")
-        java.nio.file.Files.write(
-          new java.io.File(f, "rules.tsv").toPath, body.getBytes("UTF-8"))
-      } { path =>
-        // strict load: header + per-line field count + declared rule
-        // count all verified; ANY mismatch throws and the artifact
-        // wrapper rebuilds from the corpus (never serves a corrupt set)
-        val lines = new String(java.nio.file.Files.readAllBytes(
-          new java.io.File(path, "rules.tsv").toPath), "UTF-8").split("\n", -1)
-        val header = lines.headOption.getOrElse("")
-        require(header.startsWith("graft-bpe-v2 "), s"bad bpe header: $header")
-        val n = header.stripPrefix("graft-bpe-v2 ").trim.toInt
-        val rules = lines.drop(1).filter(_.nonEmpty).toSeq.map { l =>
-          l.split("\t", -1) match {
-            case Array(a, b) => (bpeUnesc(a), bpeUnesc(b))
-            case other => throw new IllegalArgumentException(
-              s"bpe rule line has ${other.length} fields: $l")
-          }
+    Tables.artifact(s, dir, "bpeRules") {
+      bpeTrain(s, dir).collect().map(r => (r.getString(1), r.getString(2))).toSeq
+    } { (rules, path) =>
+      // rank order IS the artifact: a count header then one line per
+      // rule, tab-separated with \\ \t \n ESCAPED (a symbol is
+      // arbitrary text — unescaped delimiters would silently corrupt
+      // the ruleset on reload), so load can verify structure exactly
+      val f = new java.io.File(path)
+      f.mkdirs()
+      val body = (s"graft-bpe-v2 ${rules.size}" +:
+        rules.map { case (l, r) => s"${bpeEsc(l)}\t${bpeEsc(r)}" })
+        .mkString("\n")
+      java.nio.file.Files.write(
+        new java.io.File(f, "rules.tsv").toPath, body.getBytes("UTF-8"))
+    } { path =>
+      // strict load: header + per-line field count + declared rule
+      // count all verified; ANY mismatch throws and the artifact
+      // wrapper rebuilds from the corpus (never serves a corrupt set)
+      val lines = new String(java.nio.file.Files.readAllBytes(
+        new java.io.File(path, "rules.tsv").toPath), "UTF-8").split("\n", -1)
+      val header = lines.headOption.getOrElse("")
+      require(header.startsWith("graft-bpe-v2 "), s"bad bpe header: $header")
+      val n = header.stripPrefix("graft-bpe-v2 ").trim.toInt
+      val rules = lines.drop(1).filter(_.nonEmpty).toSeq.map { l =>
+        l.split("\t", -1) match {
+          case Array(a, b) => (bpeUnesc(a), bpeUnesc(b))
+          case other => throw new IllegalArgumentException(
+            s"bpe rule line has ${other.length} fields: $l")
         }
-        require(rules.size == n, s"bpe rules: ${rules.size} loaded, $n declared")
-        rules
-      })
+      }
+      require(rules.size == n, s"bpe rules: ${rules.size} loaded, $n declared")
+      rules
+    }
 
   private def bpeEsc(sym: String): String =
     sym.replace("\\", "\\\\").replace("\t", "\\t").replace("\n", "\\n")

@@ -84,18 +84,15 @@ object Mining {
       txItems(s, dir).select(countDistinct(col("tid")).as("n"))
     }
 
-  /** Fitted FPGrowth models per (session, dir, minSupport). The mined
+  /** Fitted FPGrowth model per (session, dir, minSupport). The mined
     * model is an index artifact: a deployment trains it once per corpus
-    * and serves queries from it (same policy as the IVF codebook cache,
-    * LlmOps.kmeansCache). Cached alongside the memoized `freqItemsets`
-    * frame below because `FPGrowthModel.freqItemsets` is a DataFrame over
-    * a lazily recomputed RDD lineage — caching only the model would re-run
-    * the whole PFP mining on every downstream action. */
-  private val fpModelCache =
-    scala.collection.concurrent.TrieMap[(Int, String, Double), org.apache.spark.ml.fpm.FPGrowthModel]()
-
+    * and serves queries from it (same policy as the IVF codebook).
+    * Stored alongside the indexed `freqItemsets` frame below because
+    * `FPGrowthModel.freqItemsets` is a DataFrame over a lazily recomputed
+    * RDD lineage — keeping only the model would re-run the whole PFP
+    * mining on every downstream action. */
   private def fpModel(s: SparkSession, dir: String, minSup: Double): org.apache.spark.ml.fpm.FPGrowthModel =
-    fpModelCache.getOrElseUpdate((System.identityHashCode(s), dir, minSup),
+    Tables.sessionValue(s, dir, s"fpModel_$minSup")(
       new FPGrowth()
         .setItemsCol("items").setMinSupport(minSup).setMinConfidence(MinConf)
         .fit(baskets(s, dir)))

@@ -1296,23 +1296,19 @@ object Relational {
     * codebook: a pipeline creates its bucketed layout at ingest and
     * every downstream join reads it; re-writing per query would time the
     * ingest, not the join. */
-  private val bucketedLayout =
-    scala.collection.concurrent.TrieMap[(Int, String), (String, String)]()
-
   def relBucketedJoin(s: SparkSession, dir: String): DataFrame = {
-    val (li, ord) = bucketedLayout.getOrElseUpdate(
-      (System.identityHashCode(s), dir), {
-        val sfx = new java.io.File(dir).getName.replace('.', '_')
-        val liT = s"li_bk_$sfx"; val ordT = s"ord_bk_$sfx"
-        resetManagedTable(s, liT); resetManagedTable(s, ordT)
-        Tables.load(s, dir, "lineitem").select("l_orderkey", "l_quantity")
-          .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-          .mode("overwrite").saveAsTable(liT)
-        Tables.load(s, dir, "orders").select("o_orderkey", "o_orderpriority")
-          .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-          .mode("overwrite").saveAsTable(ordT)
-        (liT, ordT)
-      })
+    val (li, ord) = Tables.sessionValue(s, dir, "bucketedLayout") {
+      val sfx = new java.io.File(dir).getName.replace('.', '_')
+      val liT = s"li_bk_$sfx"; val ordT = s"ord_bk_$sfx"
+      resetManagedTable(s, liT); resetManagedTable(s, ordT)
+      Tables.load(s, dir, "lineitem").select("l_orderkey", "l_quantity")
+        .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+        .mode("overwrite").saveAsTable(liT)
+      Tables.load(s, dir, "orders").select("o_orderkey", "o_orderpriority")
+        .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+        .mode("overwrite").saveAsTable(ordT)
+      (liT, ordT)
+    }
     s.table(li).join(s.table(ord), col("l_orderkey") === col("o_orderkey"))
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("line_cnt"),

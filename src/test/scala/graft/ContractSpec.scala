@@ -759,7 +759,7 @@ class ContractSpec extends SparkSpec {
   }
 
   test("partitioned parquet write enables partition pruning on read") {
-    val path = s"/tmp/graft-part-${System.nanoTime()}"
+    val path = tempDir("part")
     Tables.load(spark, sf, "documents")
       .write.partitionBy("lang").mode("overwrite").parquet(path)
     val filtered = spark.read.parquet(path).filter(col("lang") === "en")
@@ -792,7 +792,7 @@ class ContractSpec extends SparkSpec {
   test("csv and json sources round-trip a table with schema pinned") {
     val docs = Tables.load(spark, sf, "documents")
       .select("doc_id", "lang", "n_chars").orderBy("doc_id")
-    val base = s"/tmp/graft-fmt-${System.nanoTime()}"
+    val base = tempDir("fmt")
     docs.write.option("header", "true").csv(s"$base/csv")
     docs.write.json(s"$base/json")
     val csvBack = spark.read.option("header", "true")
@@ -806,7 +806,7 @@ class ContractSpec extends SparkSpec {
 
   test("orc source round-trips embeddings including the float-array column") {
     val emb = Tables.load(spark, sf, "embeddings")
-    val path = s"/tmp/graft-orc-${System.nanoTime()}"
+    val path = tempDir("orc")
     emb.write.mode("overwrite").orc(path)
     val back = spark.read.orc(path)
     assert(back.schema == emb.schema)
@@ -853,7 +853,7 @@ class ContractSpec extends SparkSpec {
   test("FIMI text source round-trips the mining baskets") {
     val baskets = operators.Mining.baskets(spark, sf)
       .orderBy("tid").select("items")
-    val path = s"/tmp/graft-fimi-${System.nanoTime()}"
+    val path = s"${tempDir("fimi")}/t"
     FimiSource.write(baskets, path)
     val back = FimiSource.read(spark, path)
     assert(back.count() == baskets.count())
@@ -873,7 +873,7 @@ class ContractSpec extends SparkSpec {
     // TimestampType shape — normalize to TimestampType with identical
     // epoch-µs values under the UTC session.
     val tsType = org.apache.spark.sql.types.TimestampType
-    val base = java.nio.file.Files.createTempDirectory("graft-tsdrift").toString
+    val base = tempDir("tsdrift")
     val epochUs = 1704067200000000L // 2024-01-01T00:00:00Z
     def shaped(tsCol: org.apache.spark.sql.Column) =
       spark.range(5).select(
@@ -929,7 +929,7 @@ class ContractSpec extends SparkSpec {
   test("Tables.load caches the inferred schema, never the frame") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import scala.jdk.CollectionConverters._
-    val base = java.nio.file.Files.createTempDirectory("graft-schema")
+    val base = java.nio.file.Paths.get(tempDir("schema"))
     val file = base.resolve("items.parquet")
     // one parquet file, as the corpus tables are
     def write(df: org.apache.spark.sql.DataFrame): Unit = {
@@ -981,10 +981,7 @@ class ContractSpec extends SparkSpec {
       assert(a.queryExecution.analyzed.output.map(_.exprId)
         .intersect(b.queryExecution.analyzed.output.map(_.exprId)).isEmpty)
       assert(a.join(b, a("id") === b("d")).count() == 5)
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
-    }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("memo session retention: cycling many sessions never grows the cache monotonically") {
@@ -993,18 +990,27 @@ class ContractSpec extends SparkSpec {
     // one of them (and their persisted blocks) forever. The LRU bound
     // must hold the session count at MaxMemoSessions however many
     // sessions come and go.
-    val entriesBefore = Tables.memoEntryCount
-    (0 until 20).foreach { i =>
+    // Each churned session also holds one non-frame value; eviction
+    // drops both and unpersists the frame. The frames differ per
+    // session because Spark's cache manager shares one cache entry
+    // between equal plans.
+    val entriesBefore = Tables.sessionEntryCount
+    val frames = (0 until 20).map { i =>
       val s2 = spark.newSession()
       val df = Tables.memo(s2, sf, "spec_retention") {
-        s2.range(5).toDF("v")
+        s2.range(5).toDF("v").withColumn("session", lit(i))
       }
       assert(df.count() == 5)
+      assert(Tables.sessionValue(s2, sf, "spec_retention_value")(i) == i)
+      df
     }
-    assert(Tables.memoSessionCount <= 8,
-      s"cache retains ${Tables.memoSessionCount} sessions — unbounded growth")
-    assert(Tables.memoEntryCount <= entriesBefore + 8,
-      s"entries grew from $entriesBefore to ${Tables.memoEntryCount} after 20 session cycles")
+    assert(Tables.sessionCount <= 8,
+      s"cache retains ${Tables.sessionCount} sessions — unbounded growth")
+    assert(Tables.sessionEntryCount <= entriesBefore + 16,
+      s"entries grew from $entriesBefore to ${Tables.sessionEntryCount} after 20 session cycles")
+    val none = org.apache.spark.storage.StorageLevel.NONE
+    assert(frames.dropRight(8).forall(_.storageLevel == none), "an evicted frame stays persisted")
+    assert(frames.last.storageLevel != none)
     // an ACTIVE session is never evicted by its own use: re-touching the
     // last session keeps its entry across another churn wave
     val live = spark.newSession()
@@ -1016,6 +1022,20 @@ class ContractSpec extends SparkSpec {
     }
   }
 
+  test("sessionValue builds once per (session, dir, key) and again in a new session") {
+    var builds = 0
+    def value(s: org.apache.spark.sql.SparkSession, dir: String, key: String) =
+      Tables.sessionValue(s, dir, key) { builds += 1; builds }
+    val s1 = spark.newSession()
+    assert(value(s1, sf, "spec_value") == 1)
+    assert(value(s1, sf, "spec_value") == 1, "a second call rebuilt")
+    assert(value(s1, sf, "spec_value_2") == 2)
+    assert(value(s1, sf + "_other", "spec_value") == 3)
+    val s2 = s1.newSession()
+    assert(value(s2, sf, "spec_value") == 4, "a new session was served another session's value")
+    assert(value(s1, sf, "spec_value") == 1)
+  }
+
   test("persisted index: served across sessions from disk, invalidated by a source change") {
     // r15 VERDICT task 6: Tables.index spills a derived frame to the
     // versioned on-disk store; a fresh session (≈ a cold JVM: the
@@ -1023,7 +1043,7 @@ class ContractSpec extends SparkSpec {
     // rebuilding, and ANY source-file change must flip the fingerprint
     // and force a rebuild — stale artifacts are structurally
     // unreachable (the fingerprint is in the path).
-    val dir = java.nio.file.Files.createTempDirectory("graft-idxspec").toString
+    val dir = tempDir("idxspec")
     spark.range(5).toDF("x").coalesce(1).write.parquet(s"$dir/t.parquet")
     var builds = 0
     def build(s: org.apache.spark.sql.SparkSession) = {
@@ -1046,9 +1066,34 @@ class ContractSpec extends SparkSpec {
     assert(builds == 2, s"stale fingerprint was served ($builds builds)")
   }
 
+  test("disk store: an index miss memoizes its published copy, an artifact loads only on a hit, UDT frames stay memo-only") {
+    val dir = tempDir("storespec")
+    spark.range(5).toDF("x").coalesce(1).write.parquet(s"$dir/t.parquet")
+    val tag = java.util.UUID.randomUUID().toString.take(8)
+    val ix = Tables.index(spark.newSession(), dir, s"ix_$tag")(spark.range(3).toDF("v"))
+    val Seq(kdir) = indexDirsFor(s"ix_$tag")
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val roots = ix.queryExecution.analyzed.collect {
+      case l: LogicalRelation => l.relation
+    }.collect { case h: HadoopFsRelation => h.location.rootPaths.map(_.getName) }.flatten
+    assert(roots == Seq(kdir.getName), s"the miss did not read back the published copy: $roots")
+    var (builds, loads) = (0, 0)
+    def model(s: org.apache.spark.sql.SparkSession) =
+      Tables.artifact(s, dir, s"art_$tag") { builds += 1; "m" } { (m, path) =>
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(path, "m"), m)
+      } { path => loads += 1; java.nio.file.Files.readString(java.nio.file.Paths.get(path, "m")) }
+    assert(model(spark.newSession()) == "m" && (builds, loads) == (1, 0))
+    assert(model(spark.newSession()) == "m" && (builds, loads) == (1, 1))
+    val udt = Tables.index(spark.newSession(), dir, s"udt_$tag")(spark.range(3).select(
+      org.apache.spark.ml.functions.array_to_vector(array(col("id").cast("double"))).as("v")))
+    assert(udt.count() == 3)
+    assert(indexDirsFor(s"udt_$tag").isEmpty, "a UDT frame was stored")
+  }
+
   /** All on-disk `<key>__*` artifact dirs for `key`, across the store. */
   private def indexDirsFor(key: String): Seq[java.io.File] = {
-    val root = new java.io.File(sys.props("java.io.tmpdir"), "graft_index")
+    val root = new java.io.File(Tables.indexRoot.get)
     Option(root.listFiles()).getOrElse(Array.empty).toSeq
       .flatMap(dh => Option(dh.listFiles()).getOrElse(Array.empty).toSeq)
       .filter(_.getName.startsWith(key + "__"))
@@ -1061,7 +1106,7 @@ class ContractSpec extends SparkSpec {
     // processes' loads) would fail mid-scan. Simulated in one JVM:
     // fresh sessions stand in for JVMs (the session memo is empty),
     // and the held frame stands in for the concurrent reader.
-    val dir = java.nio.file.Files.createTempDirectory("graft-agespec").toString
+    val dir = tempDir("agespec")
     spark.range(5).toDF("x").coalesce(1).write.parquet(s"$dir/t.parquet")
     def bump(): Unit = {
       val part = new java.io.File(s"$dir/t.parquet").listFiles()
@@ -1096,7 +1141,7 @@ class ContractSpec extends SparkSpec {
   test("persisted index is best-effort: a corrupt stored copy rebuilds and an unwritable root degrades to memo") {
     // r16 ADVICE: index() had no try/catch around the spill, unlike
     // artifact() — a full/unwritable root failed every routed key.
-    val dir = java.nio.file.Files.createTempDirectory("graft-bespec").toString
+    val dir = tempDir("bespec")
     spark.range(5).toDF("x").coalesce(1).write.parquet(s"$dir/t.parquet")
     var builds = 0
     def build(s: org.apache.spark.sql.SparkSession) = {
@@ -1118,7 +1163,7 @@ class ContractSpec extends SparkSpec {
     assert(builds == 2, s"corrupt artifact was not rebuilt ($builds builds)")
     assert(out == Seq(0L, 1L, 2L))
     // unwritable root (a FILE at the root path): the query still answers
-    val badRoot = java.nio.file.Files.createTempFile("graft-noroot", ".f")
+    val badRoot = java.nio.file.Files.createFile(java.nio.file.Paths.get(tempDir("noroot"), "root.f"))
     val prev = Tables.indexRootOverride
     try {
       Tables.indexRootOverride = Some(Some(badRoot.toString))

@@ -15,9 +15,6 @@ import graft.sources.fimi.{FimiChanges, FimiLog}
   * history fails loudly, and the relation is read-only. */
 class FimiChangesSpec extends SparkSpec {
 
-  private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft-cdf-$tag").toString
-
   private def writeBaskets(dest: String, lines: Seq[String], mode: String,
       parts: Int = 1): Unit = {
     val sp = spark
@@ -39,7 +36,7 @@ class FimiChangesSpec extends SparkSpec {
       .sortBy(_.mkString("|"))
 
   test("append commits read back as inserts tagged with their version") {
-    val dest = s"${tmpDir("append")}/t.fimi"
+    val dest = s"${tempDir("append")}/t.fimi"
     writeBaskets(dest, Seq("a b", "b c"), "overwrite")
     writeBaskets(dest, Seq("c d"), "append")
     val all = basketStrings(changes(dest, 0),
@@ -61,7 +58,7 @@ class FimiChangesSpec extends SparkSpec {
   }
 
   test("copy-on-write DELETE: raw feed carries carryover pairs, net() cancels them") {
-    val root = tmpDir("cowdel")
+    val root = tempDir("cowdel")
     Files.createDirectories(java.nio.file.Paths.get(root, "ns"))
     val dest = s"$root/ns/t.fimi"
     // two part files so the rewrite granularity (whole touched files) shows
@@ -106,7 +103,7 @@ class FimiChangesSpec extends SparkSpec {
   }
 
   test("vacuumed history fails loudly; an append at the retained boundary still diffs") {
-    val dest = s"${tmpDir("vac")}/t.fimi"
+    val dest = s"${tempDir("vac")}/t.fimi"
     writeBaskets(dest, Seq("a b"), "overwrite") // v0
     writeBaskets(dest, Seq("b c"), "append")    // v1
     writeBaskets(dest, Seq("c d"), "append")    // v2
@@ -126,7 +123,7 @@ class FimiChangesSpec extends SparkSpec {
   }
 
   test("guards: bad ranges, versionAsOf exclusivity, read-only relation, plain dirs") {
-    val dest = s"${tmpDir("guards")}/t.fimi"
+    val dest = s"${tempDir("guards")}/t.fimi"
     writeBaskets(dest, Seq("a b"), "overwrite")
     val tooFar = intercept[Exception] { changes(dest, 5).collect() }
     assert(tooFar.getMessage.contains("invalid change range"), tooFar.getMessage)
@@ -144,14 +141,14 @@ class FimiChangesSpec extends SparkSpec {
     }
     assert(ro.getMessage.contains("read-only"), ro.getMessage)
     // a directory with no snapshot log has no reconstructable history
-    val plain = tmpDir("plain")
+    val plain = tempDir("plain")
     Files.write(java.nio.file.Paths.get(plain, "a.dat"), "x y\n".getBytes("UTF-8"))
     val noLog = intercept[Exception] { changes(plain, 0).collect() }
     assert(noLog.getMessage.contains("snapshot log"), noLog.getMessage)
   }
 
   test("streaming change feed: version-aligned micro-batches, capped admission, checkpoint resume") {
-    val root = tmpDir("cdc")
+    val root = tempDir("cdc")
     Files.createDirectories(java.nio.file.Paths.get(root, "ns"))
     val dest = s"$root/ns/t.fimi"
     writeBaskets(dest, Seq("a b", "x y", "a z", "q r"), "overwrite", parts = 2) // v0
@@ -159,7 +156,7 @@ class FimiChangesSpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.graft_cdc", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft_cdc.root", root)
     spark.sql("DELETE FROM graft_cdc.ns.t WHERE array_contains(items, 'a')")   // v2
-    val ck = s"${tmpDir("cdc-ck")}/ck"
+    val ck = s"${tempDir("cdc-ck")}/ck"
     // one batch = (distinct versions in it, its (change, basket) rows)
     def drain(): Seq[(Seq[Long], Seq[(String, String)])] = {
       val batches = scala.collection.mutable.ArrayBuffer
@@ -208,7 +205,7 @@ class FimiChangesSpec extends SparkSpec {
   }
 
   test("the feed plans only the files the range's commits touched, never the table") {
-    val root = tmpDir("pruneplan")
+    val root = tempDir("pruneplan")
     Files.createDirectories(java.nio.file.Paths.get(root, "ns"))
     val dest = s"$root/ns/t.fimi"
     writeBaskets(dest, Seq("x y"), "overwrite") // v0, file 1
@@ -230,7 +227,7 @@ class FimiChangesSpec extends SparkSpec {
   }
 
   test("changesFromTimestamp resolves through the commit ledger; vacuumed boundaries refuse") {
-    val dest = s"${tmpDir("fromts")}/t.fimi"
+    val dest = s"${tempDir("fromts")}/t.fimi"
     writeBaskets(dest, Seq("a b"), "overwrite") // v0
     Thread.sleep(20) // distinct #ts instants at ms grain
     writeBaskets(dest, Seq("b c"), "append")    // v1
@@ -267,7 +264,7 @@ class FimiChangesSpec extends SparkSpec {
   }
 
   test("pushed _commit_version and _change_type predicates prune feed partitions at planning") {
-    val root = tmpDir("pushdown")
+    val root = tempDir("pushdown")
     Files.createDirectories(java.nio.file.Paths.get(root, "ns"))
     val dest = s"$root/ns/t.fimi"
     writeBaskets(dest, Seq("x y"), "overwrite") // v0, file 1
@@ -315,7 +312,7 @@ class FimiChangesSpec extends SparkSpec {
   }
 
   test("column pruning reaches the feed: version-only and count scans work") {
-    val dest = s"${tmpDir("prune")}/t.fimi"
+    val dest = s"${tempDir("prune")}/t.fimi"
     writeBaskets(dest, Seq("a b", "b c"), "overwrite")
     writeBaskets(dest, Seq("c d"), "append")
     assert(changes(dest, 0).count() == 3)
@@ -325,13 +322,13 @@ class FimiChangesSpec extends SparkSpec {
   }
 
   test("a streaming changesFrom beyond latest+1 fails at start, not as a silent empty stream") {
-    val dest = s"${tmpDir("ahead")}/t.fimi"
+    val dest = s"${tempDir("ahead")}/t.fimi"
     writeBaskets(dest, Seq("a b"), "overwrite") // v0 only
     def stream(from: Long): Unit = {
       val q = spark.readStream.format("fimi")
         .option(FimiChanges.FromOption, from).load(dest)
         .writeStream.outputMode("append").format("noop")
-        .option("checkpointLocation", s"${tmpDir(s"ahead-ck-$from")}/ck")
+        .option("checkpointLocation", s"${tempDir(s"ahead-ck-$from")}/ck")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       try { if (!q.awaitTermination(120000)) fail("drain did not stop") }
@@ -347,7 +344,7 @@ class FimiChangesSpec extends SparkSpec {
   }
 
   test("version bounds at the Long extremes saturate to empty, never wrap to no-prune") {
-    val dest = s"${tmpDir("satur")}/t.fimi"
+    val dest = s"${tempDir("satur")}/t.fimi"
     writeBaskets(dest, Seq("a b"), "overwrite")
     writeBaskets(dest, Seq("b c"), "append")
     val all = changes(dest, 0)

@@ -13,9 +13,6 @@ import org.apache.spark.sql.functions._
   * catalog (`CREATE TABLE ... USING fimi`) surface. */
 class FimiDsv2Spec extends SparkSpec {
 
-  private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft-fimi-$tag").toString
-
   private def writeLines(dir: String, name: String, lines: Seq[String]): Unit = {
     val p = java.nio.file.Paths.get(dir, name)
     Files.write(p, String.join("\n", lines: _*).getBytes("UTF-8"))
@@ -33,7 +30,7 @@ class FimiDsv2Spec extends SparkSpec {
   }
 
   test("read matches the FimiSource helper's baskets, content-identical") {
-    val dir = tmpDir("content")
+    val dir = tempDir("content")
     writeLines(dir, "tx.dat", Seq(
       "b a c", "a a b", "", "  ", "z", "c b"))
     val v2 = readFimi(dir)
@@ -58,13 +55,13 @@ class FimiDsv2Spec extends SparkSpec {
       def items(r: org.apache.spark.sql.Row) = r.getSeq[String](1).toList
       val want = lines.map(l => tokens(l).distinct.sorted.toList)
       val opts = Map("sep" -> sep)
-      val dir = tmpDir("sep")
+      val dir = tempDir("sep")
       writeLines(dir, "tx.dat", lines)
       assert(readFimi(dir, opts).orderBy("tid").collect().map(items).toSeq == want, s"dsv2, sep $sep")
       assert(graft.sources.FimiSource.read(spark, s"$dir/tx.dat", sep).orderBy("tid")
         .collect().map(items).toSeq == want, s"FimiSource, sep $sep")
       // bucketed layout: each line starts with its explicit tid
-      val bdir = tmpDir("sepb")
+      val bdir = tempDir("sepb")
       new java.io.File(s"$bdir/bucket=0").mkdirs()
       val tidLines = lines.zipWithIndex.map { case (l, i) => s"$i${if (sep == ",") "," else "\t"}$l" }
       writeLines(s"$bdir/bucket=0", "part-0.dat", tidLines)
@@ -74,7 +71,7 @@ class FimiDsv2Spec extends SparkSpec {
   }
 
   test("tids are deterministic and split-invariant: 1-byte-off split sizes agree") {
-    val dir = tmpDir("splits")
+    val dir = tempDir("splits")
     val lines = (0 until 2000).map(i => s"i${i % 7} i${i % 13} i${i % 31}")
     writeLines(dir, "big.dat", lines)
     val whole = readFimi(dir).collect()
@@ -91,7 +88,7 @@ class FimiDsv2Spec extends SparkSpec {
   }
 
   test("multi-file reads order file ordinals by path; tids stay unique") {
-    val dir = tmpDir("multifile")
+    val dir = tempDir("multifile")
     writeLines(dir, "a.dat", Seq("x y", "y z"))
     writeLines(dir, "b.dat", Seq("x y", "p q"))
     val rows = readFimi(dir).select("tid").collect().map(_.getLong(0))
@@ -101,7 +98,7 @@ class FimiDsv2Spec extends SparkSpec {
   }
 
   test("column pruning reaches the reader: items-only scan drops tid") {
-    val dir = tmpDir("prune")
+    val dir = tempDir("prune")
     writeLines(dir, "tx.dat", Seq("a b", "b c"))
     val df = readFimi(dir).select("items")
     val scan = scanOf(df)
@@ -114,7 +111,7 @@ class FimiDsv2Spec extends SparkSpec {
   }
 
   test("limit pushes into the scan; global semantics unchanged") {
-    val dir = tmpDir("limit")
+    val dir = tempDir("limit")
     writeLines(dir, "tx.dat", (0 until 100).map(i => s"a$i b$i"))
     val df = readFimi(dir).limit(7)
     assert(df.count() == 7)
@@ -123,7 +120,7 @@ class FimiDsv2Spec extends SparkSpec {
   }
 
   test("tid-range predicate prunes whole splits at planning") {
-    val dir = tmpDir("tidprune")
+    val dir = tempDir("tidprune")
     val lines = (0 until 4000).map(i => s"i${i % 7} i${i % 13}")
     writeLines(dir, "big.dat", lines)
     val opts = Map("maxSplitBytes" -> "1024")
@@ -143,9 +140,9 @@ class FimiDsv2Spec extends SparkSpec {
   }
 
   test("write commits atomically: overwrite truncates, append adds, no staging residue") {
-    val src = tmpDir("wsrc")
+    val src = tempDir("wsrc")
     writeLines(src, "tx.dat", Seq("a b c", "b c", "a c"))
-    val dest = tmpDir("wdest") + "/out"
+    val dest = tempDir("wdest") + "/out"
     val baskets = readFimi(src)
     baskets.write.format("fimi").mode("overwrite").save(dest)
     val back1 = readFimi(dest)
@@ -169,7 +166,7 @@ class FimiDsv2Spec extends SparkSpec {
     val baskets = operators.Mining.fpmBasketize(spark, sf)
       .select(col("l_orderkey").as("tid"),
         split(col("items_str"), ",").as("items"))
-    val dest = tmpDir("roundtrip") + "/corpus"
+    val dest = tempDir("roundtrip") + "/corpus"
     baskets.write.format("fimi").mode("overwrite").save(dest)
     val back = readFimi(dest)
     assert(back.count() == baskets.count())
@@ -183,7 +180,7 @@ class FimiDsv2Spec extends SparkSpec {
   }
 
   test("compressed file: single split, unique line-counter tids, content intact") {
-    val dir = tmpDir("gz")
+    val dir = tempDir("gz")
     val out = new java.util.zip.GZIPOutputStream(
       new java.io.FileOutputStream(s"$dir/tx.dat.gz"))
     out.write((0 until 500).map(i => s"a$i b").mkString("\n").getBytes("UTF-8"))
@@ -198,8 +195,8 @@ class FimiDsv2Spec extends SparkSpec {
   }
 
   test("streaming read: new files become micro-batches; restart resumes from the checkpoint log") {
-    val src = tmpDir("stream-src")
-    val ck = tmpDir("stream-ck") + "/ck"
+    val src = tempDir("stream-src")
+    val ck = tempDir("stream-ck") + "/ck"
     // phase files land one per run; foreachBatch (not the memory sink:
     // memory is not fault-tolerant, Spark refuses to restart it from a
     // checkpoint) captures exactly that run's emissions.
@@ -236,8 +233,8 @@ class FimiDsv2Spec extends SparkSpec {
   }
 
   test("admission control: maxFilesPerTrigger bounds each micro-batch to one file") {
-    val src = tmpDir("admit-src")
-    val ck = tmpDir("admit-ck") + "/ck"
+    val src = tempDir("admit-src")
+    val ck = tempDir("admit-ck") + "/ck"
     writeLines(src, "a.dat", Seq("x y", "y z"))
     writeLines(src, "b.dat", Seq("p q"))
     writeLines(src, "c.dat", Seq("r s", "s t"))
@@ -262,8 +259,8 @@ class FimiDsv2Spec extends SparkSpec {
   }
 
   test("Trigger.AvailableNow drains exactly the files present at start, in capped batches, then stops") {
-    val src = tmpDir("avnow-src")
-    val ck = tmpDir("avnow-ck") + "/ck"
+    val src = tempDir("avnow-src")
+    val ck = tempDir("avnow-ck") + "/ck"
     writeLines(src, "a.dat", Seq("x y"))
     writeLines(src, "b.dat", Seq("p q"))
     def drainNow(): Seq[Seq[String]] = {
@@ -292,7 +289,7 @@ class FimiDsv2Spec extends SparkSpec {
   }
 
   test("data-update guard: a COW rewrite under an append-only stream fails loudly; ignoreChanges opts in") {
-    val root = tmpDir("updguard")
+    val root = tempDir("updguard")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root, "ns"))
     val dest = s"$root/ns/t.fimi"
     val sp = spark
@@ -301,7 +298,7 @@ class FimiDsv2Spec extends SparkSpec {
       .select(split(col("raw"), " ").as("items")).coalesce(1)
       .write.format("fimi").option("snapshots", "true")
       .mode("overwrite").save(dest)
-    val ck = s"${tmpDir("updguard-ck")}/ck"
+    val ck = s"${tempDir("updguard-ck")}/ck"
     def drain(ignore: Boolean): Seq[String] = {
       val buf = scala.collection.mutable.ArrayBuffer.empty[String]
       val r = spark.readStream.format("fimi")
@@ -335,14 +332,14 @@ class FimiDsv2Spec extends SparkSpec {
   }
 
   test("streams ride through OPTIMIZE: compaction-rewritten content is never re-delivered, appends keep flowing") {
-    val dest = s"${tmpDir("optride")}/t.fimi"
+    val dest = s"${tempDir("optride")}/t.fimi"
     val sp = spark
     import sp.implicits._
     def append(lines: String*): Unit =
       lines.toSeq.toDF("raw").select(split(col("raw"), " ").as("items")).coalesce(1)
         .write.format("fimi").option("snapshots", "true").mode("append").save(dest)
     append("a b"); append("b c"); append("c d") // 3 one-file commits
-    val ck = s"${tmpDir("optride-ck")}/ck"
+    val ck = s"${tempDir("optride-ck")}/ck"
     def drain(): Seq[String] = {
       val buf = scala.collection.mutable.ArrayBuffer.empty[String]
       val q = spark.readStream.format("fimi").load(dest)
@@ -384,7 +381,7 @@ class FimiDsv2Spec extends SparkSpec {
   }
 
   test("an ignoreChanges ride-through is durable: forgiven files persist as acct markers and survive restart + vacuum") {
-    val root = tmpDir("forgive")
+    val root = tempDir("forgive")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root, "ns"))
     val dest = s"$root/ns/t.fimi"
     val sp = spark
@@ -393,7 +390,7 @@ class FimiDsv2Spec extends SparkSpec {
       .select(split(col("raw"), " ").as("items")).coalesce(1)
       .write.format("fimi").option("snapshots", "true")
       .mode("overwrite").save(dest)
-    val ckRoot = tmpDir("forgive-ck")
+    val ckRoot = tempDir("forgive-ck")
     val ck = s"$ckRoot/ck"
     def drain(): Seq[String] = {
       val buf = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -448,9 +445,9 @@ class FimiDsv2Spec extends SparkSpec {
   }
 
   test("acct persistence retries past a sequence collision instead of dropping the classification") {
-    val dir = tmpDir("acctrace")
+    val dir = tempDir("acctrace")
     writeLines(dir, "a.dat", Seq("x y"))
-    val ck = s"${tmpDir("acctrace-ck")}/src0"
+    val ck = s"${tempDir("acctrace-ck")}/src0"
     val kvs = graft.sources.fimi.FimiTable.confKVs(
       spark.sessionState.newHadoopConf())
     val stream = new graft.sources.fimi.FimiMicroBatchStream(
@@ -475,14 +472,14 @@ class FimiDsv2Spec extends SparkSpec {
   }
 
   test("ignoreChanges never re-delivers proven-safe compaction output") {
-    val dest = s"${tmpDir("ignopt")}/t.fimi"
+    val dest = s"${tempDir("ignopt")}/t.fimi"
     val sp = spark
     import sp.implicits._
     def append(lines: String*): Unit =
       lines.toSeq.toDF("raw").select(split(col("raw"), " ").as("items")).coalesce(1)
         .write.format("fimi").option("snapshots", "true").mode("append").save(dest)
     append("a b"); append("b c")
-    val ck = s"${tmpDir("ignopt-ck")}/ck"
+    val ck = s"${tempDir("ignopt-ck")}/ck"
     def drain(): Seq[String] = {
       val buf = scala.collection.mutable.ArrayBuffer.empty[String]
       val q = spark.readStream.format("fimi").option("ignoreChanges", "true").load(dest)
@@ -505,7 +502,7 @@ class FimiDsv2Spec extends SparkSpec {
   }
 
   test("data skipping: evolved-column predicates prune whole files via manifest stats, tids unchanged") {
-    val root = tmpDir("skip")
+    val root = tempDir("skip")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root, "ns"))
     val dest = s"$root/ns/t.fimi"
     val sp = spark
@@ -573,7 +570,7 @@ class FimiDsv2Spec extends SparkSpec {
   test("storage-partitioned join: two bucketed fimi tables join with ZERO shuffle exchanges") {
     val sp = spark
     import sp.implicits._
-    val root = tmpDir("spj")
+    val root = tempDir("spj")
     new java.io.File(s"$root/ns").mkdirs()
     // two co-bucketed tables sharing the tid key space
     val ta = (0L until 400L).map(t => (t, Seq(s"a${t % 7}", s"a${t % 3}")))
@@ -625,7 +622,7 @@ class FimiDsv2Spec extends SparkSpec {
   test("bucketed layout guards: append N-mismatch refused, shrink clears stale dirs, optionless read errors") {
     val sp = spark
     import sp.implicits._
-    val dest = tmpDir("guards") + "/t.fimib"
+    val dest = tempDir("guards") + "/t.fimib"
     val rows = (0L until 100L).map(t => (t, Seq(s"i${t % 5}"))).toDF("tid", "items")
     rows.write.format("fimi").option("buckets", "8").mode("overwrite").save(dest)
     // append with a different N would corrupt the declared layout
@@ -658,7 +655,7 @@ class FimiDsv2Spec extends SparkSpec {
     val sp = spark
     import sp.implicits._
     // overwrite of a dir holding a native .dat must replace it entirely
-    val dir = tmpDir("truncnative")
+    val dir = tempDir("truncnative")
     writeLines(dir, "retail.dat", Seq("x y", "y z"))
     Seq((0L, Seq("a", "b"))).toDF("tid", "items")
       .write.format("fimi").mode("overwrite").save(dir)
@@ -667,7 +664,7 @@ class FimiDsv2Spec extends SparkSpec {
     assert(items == Set("a", "b"), s"old generation visible: $items")
     // compressed file: line-counter tids exceed the compressed byte
     // length; a tid filter above that length must still return rows
-    val cdir = tmpDir("gztid")
+    val cdir = tempDir("gztid")
     val gz = new java.util.zip.GZIPOutputStream(
       new java.io.FileOutputStream(s"$cdir/many.dat.gz"))
     gz.write(Array.fill(50000)("w").mkString("", "\n", "\n").getBytes("UTF-8"))
@@ -679,9 +676,9 @@ class FimiDsv2Spec extends SparkSpec {
   }
 
   test("streaming write: readStream→writeStream is exactly-once across restart AND a replayed epoch") {
-    val src = tmpDir("swrite-src")
-    val dest = tmpDir("swrite-dest") + "/sink"
-    val ck = tmpDir("swrite-ck") + "/ck"
+    val src = tempDir("swrite-src")
+    val dest = tempDir("swrite-dest") + "/sink"
+    val ck = tempDir("swrite-ck") + "/ck"
     // the engine's per-session checkpoint-file cache would flag our
     // hand-deleted commit marker as a concurrent writer; a genuine
     // crash-replay starts a fresh driver with no such cache — disable
@@ -755,7 +752,7 @@ class FimiDsv2Spec extends SparkSpec {
   test("snapshot log: versionAsOf time travel; truncate keeps old generations; staged writes invisible") {
     val sp = spark
     import sp.implicits._
-    val dest = tmpDir("snap") + "/t"
+    val dest = tempDir("snap") + "/t"
     def baskets(df: DataFrame): Seq[String] =
       df.select(concat_ws(",", col("items")).as("b"))
         .collect().map(_.getString(0)).sorted.toSeq
@@ -798,7 +795,7 @@ class FimiDsv2Spec extends SparkSpec {
   test("compaction: bin-packs the latest generation, preserves content AND order, keeps time travel, handles missing trailing newlines, no-ops when already compact") {
     val sp = spark
     import sp.implicits._
-    val dest = tmpDir("compact") + "/t"
+    val dest = tempDir("compact") + "/t"
     def baskets(df: DataFrame): Seq[String] =
       df.orderBy("tid").select(concat_ws(",", col("items")).as("b"))
         .collect().map(_.getString(0)).toSeq
@@ -845,7 +842,7 @@ class FimiDsv2Spec extends SparkSpec {
       fs, new org.apache.hadoop.fs.Path(dest))
     assert(vBefore == vAfter, "no-op compaction must not commit a version")
     // a small targetBytes splits into multiple bins, still content-exact
-    val dest2 = tmpDir("compact2") + "/t"
+    val dest2 = tempDir("compact2") + "/t"
     (0 until 12).foreach { i =>
       Seq((i.toLong, Seq(s"x$i", "y"))).toDF("tid", "items")
         .write.format("fimi")
@@ -859,7 +856,7 @@ class FimiDsv2Spec extends SparkSpec {
   }
 
   test("session catalog surface: CREATE TABLE ... USING fimi, then SQL over it") {
-    val dir = tmpDir("catalog")
+    val dir = tempDir("catalog")
     writeLines(dir, "tx.dat", Seq("a b", "b c", "a b c"))
     spark.sql("DROP TABLE IF EXISTS fimi_tx")
     spark.sql(s"CREATE TABLE fimi_tx USING fimi OPTIONS (path '$dir')")

@@ -46,7 +46,7 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("a .fimi directory resolves to the connector table through the same catalog") {
-    val root = Files.createTempDirectory("graft-cat").toString
+    val root = tempDir("cat")
     Files.createDirectories(java.nio.file.Paths.get(root, "corpus", "tx.fimi"))
     Files.write(java.nio.file.Paths.get(root, "corpus", "tx.fimi", "a.dat"),
       "x y\ny z\nx y z\n".getBytes("UTF-8"))
@@ -63,7 +63,7 @@ class GraftCatalogSpec extends SparkSpec {
   test("SQL VERSION AS OF / TIMESTAMP AS OF resolve through the catalog to pinned fimi snapshots") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("graft-cat-tt").toString
+    val root = tempDir("cat-tt")
     Files.createDirectories(java.nio.file.Paths.get(root, "corpus"))
     val dest = s"$root/corpus/tx.fimi"
     spark.conf.set("spark.sql.catalog.graft_tt", "graft.catalog.GraftCatalog")
@@ -156,7 +156,7 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("one root serves multiple namespaces; DESCRIBE NAMESPACE shows each location") {
-    val root = Files.createTempDirectory("graft-cat-multi").toString
+    val root = tempDir("cat-multi")
     for (ns <- Seq("bronze", "silver")) {
       val dir = java.nio.file.Paths.get(root, ns, "tx.fimi")
       Files.createDirectories(dir)
@@ -185,7 +185,7 @@ class GraftCatalogSpec extends SparkSpec {
       e.getCause != null && e.getCause.getMessage.contains("read-only"),
       e.getMessage)
     // external rewrite of a .fimi table becomes visible after invalidate
-    val root = Files.createTempDirectory("graft-cat-inv").toString
+    val root = tempDir("cat-inv")
     val dir = java.nio.file.Paths.get(root, "ns", "t.fimi")
     Files.createDirectories(dir)
     Files.write(dir.resolve("a.dat"), "p q\n".getBytes("UTF-8"))
@@ -206,7 +206,7 @@ class GraftCatalogSpec extends SparkSpec {
     * data file each — so the copy-on-write group granularity is
     * observable per file. Returns (catalog-qualified name, table path). */
   private def dmlTable(cat: String, lines: Seq[String]): (String, String) = {
-    val root = Files.createTempDirectory(s"graft-$cat").toString
+    val root = tempDir(s"$cat")
     Files.createDirectories(java.nio.file.Paths.get(root, "ns"))
     val dest = s"$root/ns/t.fimi"
     val sp = spark
@@ -554,7 +554,7 @@ class GraftCatalogSpec extends SparkSpec {
     import sp.implicits._
     Seq((10L, Seq("x", "y")), (11L, Seq("z"))).toDF("tid", "items")
       .coalesce(1).write.format("fimi").mode("overwrite").save(srcDir)
-    val ck = s"${java.nio.file.Files.createTempDirectory("graft-sevo-ck")}/ck"
+    val ck = s"${tempDir("sevo-ck")}/ck"
     val q = spark.readStream.table(s"${t.stripSuffix(".t")}.src")
       .select(col("tid"), col("items"),
         (col("tid") * 100L).as("q")) // evolved column fed by the stream
@@ -579,7 +579,7 @@ class GraftCatalogSpec extends SparkSpec {
     // micro-batch reader must carry the table's extras — a dropped
     // extras list crashes the first projected batch)
     val got = scala.collection.mutable.ArrayBuffer.empty[(String, Any)]
-    val ck2 = s"${java.nio.file.Files.createTempDirectory("graft-sevo-ck2")}/ck"
+    val ck2 = s"${tempDir("sevo-ck2")}/ck"
     val q2 = spark.readStream.table(t)
       .select(array_join(col("items"), " ").as("b"), col("q"))
       .writeStream.outputMode("append")
@@ -650,7 +650,7 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("row-level DML demands a snapshot log and fails loudly otherwise") {
-    val root = Files.createTempDirectory("graft-dml4").toString
+    val root = tempDir("dml4")
     val dir = java.nio.file.Paths.get(root, "ns", "t.fimi")
     Files.createDirectories(dir)
     Files.write(dir.resolve("a.dat"), "a b\n".getBytes("UTF-8"))
@@ -770,7 +770,7 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("CTAS onto a fimi work table: create, DML, time-travel, drop — corpus parquet stays read-only") {
-    val root = Files.createTempDirectory("graft-ctas").toString
+    val root = tempDir("ctas")
     Files.createDirectories(java.nio.file.Paths.get(root, "work"))
     spark.conf.set("spark.sql.catalog.graft_ct", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft_ct.root", root)
@@ -824,7 +824,7 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("REPLACE TABLE AS SELECT lands as one truncate snapshot; history and abort-safety hold") {
-    val root = Files.createTempDirectory("graft-rtas").toString
+    val root = tempDir("rtas")
     Files.createDirectories(java.nio.file.Paths.get(root, "work"))
     spark.conf.set("spark.sql.catalog.graft_rt", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft_rt.root", root)
@@ -861,7 +861,7 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("catalog-managed streaming: readStream.table → writeStream.toTable is exactly-once, epochs in history") {
-    val root = Files.createTempDirectory("graft-cst").toString
+    val root = tempDir("cst")
     Files.createDirectories(java.nio.file.Paths.get(root, "ns"))
     spark.conf.set("spark.sql.catalog.graft_cst", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft_cst.root", root)
@@ -917,7 +917,7 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("CALL system.history reads the commit ledger: CTAS→INSERT→DELETE→OPTIMIZE→RTAS") {
-    val root = Files.createTempDirectory("graft-hist").toString
+    val root = tempDir("hist")
     Files.createDirectories(java.nio.file.Paths.get(root, "work"))
     spark.conf.set("spark.sql.catalog.graft_h", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft_h.root", root)

@@ -595,7 +595,7 @@ class LlmOpsSpec extends SparkSpec {
   test("dedup result is invariant under input row permutation") {
     val base = LlmOps.exactDedup(spark, sf).collect().toSeq
     // same computation over a shuffled copy of the table
-    val tmp = s"/tmp/graft-perm-${System.nanoTime()}"
+    val tmp = tempDir("perm")
     Tables.load(spark, sf, "documents").orderBy(rand(42))
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val perm = LlmOps.exactDedup(spark, tmp).collect().toSeq
@@ -819,7 +819,7 @@ class LlmOpsSpec extends SparkSpec {
   test("mean pooling is bit-invariant under input row permutation") {
     val base = LlmOps.meanPoolEmb(spark, sf).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSeq
-    val tmp = s"/tmp/graft-mp-perm-${System.nanoTime()}"
+    val tmp = tempDir("mp-perm")
     Tables.load(spark, sf, "embeddings").orderBy(rand(7))
       .repartition(7)
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")

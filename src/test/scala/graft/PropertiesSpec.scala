@@ -52,8 +52,7 @@ class PropertiesSpec extends SparkSpec {
     (1 to 4).foreach { i =>
       val (rows, buckets, parts) =
         caseGen.pureApply(Gen.Parameters.default, Seed(4242L + i))
-      val dest = java.nio.file.Files
-        .createTempDirectory(s"graft-fimib-prop$i").toString + "/t.fimib"
+      val dest = tempDir(s"fimib-prop$i") + "/t.fimib"
       rows.map { case (t, s) => (t, s.toSeq) }.toDF("tid", "items")
         .repartition(parts)
         .write.format("fimi").option("buckets", buckets.toString)

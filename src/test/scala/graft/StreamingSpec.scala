@@ -86,7 +86,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2))).toSet
     // batch equivalent on the same static rows
     val batchDf = active.toDF()
-    val tmp = s"/tmp/graft-sess-${System.nanoTime()}"
+    val tmp = tempDir("sess")
     batchDf.write.mode("overwrite").parquet(s"$tmp/events.parquet")
     val batch = Streaming.streamSession(spark, tmp)
       .select(col("user_id"), col("session_start"), col("cnt"))
@@ -511,7 +511,7 @@ class StreamingSpec extends SparkSpec {
     val sp = spark
     import sp.implicits._
     implicit val ctx = sp.sqlContext
-    val out = s"/tmp/graft-fb-${System.nanoTime()}"
+    val out = tempDir("fb")
     val ms = MemoryStream[Ev]
     val q = Streaming.tumblingStream(ms.toDF())
       .writeStream.outputMode("update")
@@ -1009,7 +1009,7 @@ class StreamingSpec extends SparkSpec {
   private def runWithRestarts(tag: String,
       transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
       phases: Seq[org.apache.spark.sql.DataFrame]): Seq[Seq[org.apache.spark.sql.Row]] = {
-    val base = s"/tmp/graft-ck-$tag-${System.nanoTime()}"
+    val base = tempDir(s"ck-$tag")
     val schema = phases.head.schema
     phases.zipWithIndex.map { case (df, i) =>
       df.coalesce(1).write.mode("append").parquet(s"$base/src")
@@ -1210,7 +1210,7 @@ class StreamingSpec extends SparkSpec {
     // overwrite-by-batchId. Simulate the crash window — stop after the
     // batch's offset+commit are written, then DELETE the commit record,
     // so the restart believes batch 0 never finished and re-runs it.
-    val base = s"/tmp/graft-replay-${System.nanoTime()}"
+    val base = tempDir("replay")
     val schema = ckPhase1.toDF().schema
     val appendLog = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
     def start() = Streaming.runningSeq(

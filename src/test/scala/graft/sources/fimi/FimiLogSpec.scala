@@ -14,9 +14,6 @@ import org.apache.spark.sql.functions._
   * compaction's optimistic-commit conflict rule. */
 class FimiLogSpec extends graft.SparkSpec {
 
-  private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft-fimilog-$tag").toString
-
   private def hfs(dir: String) =
     new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
@@ -25,7 +22,7 @@ class FimiLogSpec extends graft.SparkSpec {
       .collect().map(_.getString(0)).sorted.toSeq
 
   test("per-commit opens are O(1): a 60-epoch commit loop opens ~1 manifest per epoch; cold reads are checkpoint-bounded") {
-    val table = new Path(tmpDir("opens") + "/t")
+    val table = new Path(tempDir("opens") + "/t")
     val fs = hfs(table.toString)
     fs.mkdirs(table)
     val epochs = 60
@@ -68,7 +65,7 @@ class FimiLogSpec extends graft.SparkSpec {
     // checkpointed resolve ≡ manifest-only fold at EVERY version,
     // truncate semantics included — prove on a log with a mid-history
     // truncate landing before a checkpoint
-    val t2 = new Path(tmpDir("fold") + "/t")
+    val t2 = new Path(tempDir("fold") + "/t")
     fs.mkdirs(t2)
     FimiLog.write(fs, t2, 0L, None, truncate = false, Seq("a.dat", "b.dat"))
     FimiLog.write(fs, t2, 1L, None, truncate = true, Seq("c.dat"))
@@ -90,7 +87,7 @@ class FimiLogSpec extends graft.SparkSpec {
   test("TIMESTAMP AS OF rides the #ts header: a copied log dir (fresh mtimes) keeps its commit history") {
     val sp = spark
     import sp.implicits._
-    val dest = tmpDir("ts") + "/t"
+    val dest = tempDir("ts") + "/t"
     def commitAndStamp(items: Seq[String], mode: String): Long = {
       Seq((0L, items)).toDF("tid", "items")
         .write.format("fimi").option("snapshots", "true").mode(mode).save(dest)
@@ -111,7 +108,7 @@ class FimiLogSpec extends graft.SparkSpec {
     // restore-from-backup: byte-copy the whole table dir — every copied
     // file gets a FRESH mtime, which is exactly what mtime-based
     // resolution mis-reads as "everything committed now"
-    val copy = tmpDir("ts-copy") + "/t"
+    val copy = tempDir("ts-copy") + "/t"
     val srcRoot = java.nio.file.Paths.get(dest)
     java.nio.file.Files.walk(srcRoot).forEach { s =>
       val d = java.nio.file.Paths.get(copy).resolve(srcRoot.relativize(s))
@@ -132,7 +129,7 @@ class FimiLogSpec extends graft.SparkSpec {
   test("vacuum: retained versions read unchanged, expired versions fail loudly, only expired-only files are deleted") {
     val sp = spark
     import sp.implicits._
-    val dest = tmpDir("vac") + "/t"
+    val dest = tempDir("vac") + "/t"
     def commit(items: Seq[String], mode: String): Long = {
       Seq((0L, items)).toDF("tid", "items")
         .write.format("fimi").option("snapshots", "true").mode(mode).save(dest)
@@ -190,7 +187,7 @@ class FimiLogSpec extends graft.SparkSpec {
   test("compaction conflict: a commit landing mid-compaction restarts the attempt; a hot table aborts, never a stale truncate") {
     val sp = spark
     import sp.implicits._
-    val dest = tmpDir("conflict") + "/t"
+    val dest = tempDir("conflict") + "/t"
     (0 until 6).foreach { i =>
       Seq((i.toLong, Seq(s"x$i"))).toDF("tid", "items")
         .write.format("fimi").option("snapshots", "true")
@@ -233,7 +230,7 @@ class FimiLogSpec extends graft.SparkSpec {
   test("single-file bins are referenced by name, never rewritten") {
     val sp = spark
     import sp.implicits._
-    val dest = tmpDir("reuse") + "/t"
+    val dest = tempDir("reuse") + "/t"
     // ordinal order: two tiny files, then one big file
     Seq((0L, Seq("s0"))).toDF("tid", "items")
       .write.format("fimi").option("snapshots", "true").mode("overwrite").save(dest)
@@ -272,7 +269,7 @@ class FimiLogSpec extends graft.SparkSpec {
     // FimiCompact implementation the API tests pin: after MaxAttempts
     // races, the CALL statement itself surfaces the
     // ConcurrentModificationException and no stale truncate ever lands.
-    val root = tmpDir("sqlconflict")
+    val root = tempDir("sqlconflict")
     val dest = s"$root/ns/t.fimi"
     val sp = spark
     import sp.implicits._
@@ -312,7 +309,7 @@ class FimiLogSpec extends graft.SparkSpec {
     // schema RE-PLANS (r18 VERDICT task 5) — the last-built scan is the
     // one Spark executes — but must keep the FIRST build's version pin,
     // so two planning passes can never straddle a concurrent commit.
-    val root = tmpDir("scancache")
+    val root = tempDir("scancache")
     val dest = s"$root/t.fimi"
     val sp = spark
     import sp.implicits._
@@ -387,7 +384,7 @@ class FimiLogSpec extends graft.SparkSpec {
     val seqGen = Gen.chooseNum(8, 30).flatMap(n => Gen.listOfN(n, opGen))
     (1 to 12).foreach { case i =>
       val ops = seqGen.pureApply(Gen.Parameters.default, Seed(1800L + i))
-      val table = new Path(tmpDir(s"prop$i") + "/t")
+      val table = new Path(tempDir(s"prop$i") + "/t")
       val fs = hfs(table.toString)
       fs.mkdirs(table)
       // reference model
@@ -476,7 +473,7 @@ class FimiLogSpec extends graft.SparkSpec {
     val seqGen = Gen.chooseNum(10, 28).flatMap(n => Gen.listOfN(n, opGen))
     (1 to 10).foreach { i =>
       val ops = seqGen.pureApply(Gen.Parameters.default, Seed(3400L + i))
-      val table = new Path(tmpDir(s"schemaprop$i") + "/t")
+      val table = new Path(tempDir(s"schemaprop$i") + "/t")
       val fs = hfs(table.toString)
       fs.mkdirs(table)
       var committed = Vector.empty[
@@ -571,7 +568,7 @@ class FimiLogSpec extends graft.SparkSpec {
     val seqGen = Gen.chooseNum(8, 25).flatMap(n => Gen.listOfN(n, opGen))
     (1 to 10).foreach { i =>
       val ops = seqGen.pureApply(Gen.Parameters.default, Seed(2600L + i))
-      val table = new Path(tmpDir(s"cdfprop$i") + "/t")
+      val table = new Path(tempDir(s"cdfprop$i") + "/t")
       val fs = hfs(table.toString)
       fs.mkdirs(table)
       var committed = Vector.empty[(Long, Boolean, Seq[String])]
@@ -653,7 +650,7 @@ class FimiLogSpec extends graft.SparkSpec {
   }
 
   test("history: #op verbs read back; legacy op-less manifests derive from shape; epochs ride along") {
-    val table = new Path(tmpDir("hist") + "/t")
+    val table = new Path(tempDir("hist") + "/t")
     val fs = hfs(table.toString)
     fs.mkdirs(table)
     // explicit verbs (the writers' form since r18)

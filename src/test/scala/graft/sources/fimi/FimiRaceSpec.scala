@@ -32,7 +32,7 @@ class FimiRaceSpec extends graft.SparkSpec {
   }
 
   test("two JVMs storming one log: every version has exactly one winner, no commit lost, no torn manifest") {
-    val table = new Path(Files.createTempDirectory("graft-race").toString + "/t")
+    val table = new Path(tempDir("race") + "/t")
     val fs = hfs(table.toString)
     fs.mkdirs(table)
     val each = 25
@@ -89,7 +89,7 @@ class FimiRaceSpec extends graft.SparkSpec {
   }
 
   test("a real DML statement loses to a cross-process commit: conflict abort, no torn state") {
-    val root = Files.createTempDirectory("graft-race-dml").toString
+    val root = tempDir("race-dml")
     Files.createDirectories(java.nio.file.Paths.get(root, "ns"))
     val dest = s"$root/ns/t.fimi"
     val sp = spark
