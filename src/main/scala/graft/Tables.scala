@@ -65,7 +65,12 @@ object Tables {
     * its owner (GC-collectable once dropped). Active sessions are never
     * evicted by their own use — only by MaxMemoSessions NEWER sessions
     * arriving, in which case the evicted session's next call simply
-    * rebuilds (a perf, never a correctness, event). */
+    * rebuilds (a perf, never a correctness, event).
+    *
+    * Spark's cache manager keeps ONE entry for all equal plans across
+    * sessions, so an evicted frame is unpersisted only when no live
+    * entry holds a frame of the same result; that entry's own eviction
+    * unpersists it later. */
   private val MaxMemoSessions = 8
   private val touchCounter = new java.util.concurrent.atomic.AtomicLong(0L)
   private val tagTouch = scala.collection.concurrent.TrieMap.empty[String, Long]
@@ -74,15 +79,22 @@ object Tables {
     while (tagTouch.size > MaxMemoSessions) {
       val oldest = tagTouch.minBy(_._2)._1
       tagTouch.remove(oldest)
-      sessionCache.keys.filter(_._1 == oldest).foreach { k =>
-        sessionCache.remove(k).foreach {
-          case df: org.apache.spark.sql.Dataset[_] =>
-            try df.unpersist() catch { case _: Throwable => () }
-          case _ => ()
-        }
+      sessionCache.keys.filter(_._1 == oldest).toList.flatMap(sessionCache.remove).foreach {
+        case df: org.apache.spark.sql.Dataset[_] if !heldByLiveEntry(df) =>
+          try df.unpersist() catch { case _: Throwable => () }
+        case _ => ()
       }
     }
   }
+
+  /** Whether a live cache entry holds a frame whose plan gives the same
+    * result as `df`'s, which is how Spark's cache manager matches entries. */
+  private def heldByLiveEntry(df: org.apache.spark.sql.Dataset[_]): Boolean =
+    sessionCache.values.exists {
+      case live: org.apache.spark.sql.Dataset[_] =>
+        live.queryExecution.normalized.sameResult(df.queryExecution.normalized)
+      case _ => false
+    }
 
   /** Test hooks for the retention spec. */
   private[graft] def sessionCount: Int = tagTouch.size

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import org.apache.spark.ml.fpm.FPGrowth
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** §A — core frequent-pattern-mining surface (SURVEY.md §2.1.A).
@@ -26,7 +26,8 @@ import org.apache.spark.sql.functions._
   *    two shuffles total, group-sharded conditional FP-trees — the
   *    literal distributed lifecycle of the reference.
   *  - support thresholds are FRACTIONS of the basket count, carried as a
-  *    broadcast 1-row count joined into the plan (no driver collect).
+  *    broadcast 1-row count joined into the plan. The one driver collect
+  *    is the F-list of ≤25 item supports, once per session ([[fList]]).
   */
 object Mining {
 
@@ -59,7 +60,7 @@ object Mining {
     }
 
   /** Unthresholded per-item supports — memoized (≤25 rows, vocab-bounded). */
-  private def itemSupports(s: SparkSession, dir: String): DataFrame =
+  private[graft] def itemSupports(s: SparkSession, dir: String): DataFrame =
     Tables.memo(s, dir, "itemSupports") {
       txItems(s, dir).groupBy("item").agg(count(lit(1)).as("freq"))
     }
@@ -79,7 +80,7 @@ object Mining {
   /** 1-row DataFrame with the total basket count (broadcast into plans) —
     * memoized: it is broadcast into nearly every mining plan, and each
     * broadcast otherwise re-runs the distinct-count job. */
-  private def basketCount(s: SparkSession, dir: String): DataFrame =
+  private[graft] def basketCount(s: SparkSession, dir: String): DataFrame =
     Tables.memo(s, dir, "basketCount") {
       txItems(s, dir).select(countDistinct(col("tid")).as("n"))
     }
@@ -102,16 +103,39 @@ object Mining {
   private def fpItemsets(s: SparkSession, dir: String, minSup: Double, key: String): DataFrame =
     Tables.index(s, dir, key) { fpModel(s, dir, minSup).freqItemsets }
 
-  /** Per-user event-type sequences in deterministic (ts, event_id) order —
-    * memoized: both PrefixSpan keys start from this one
-    * groupBy+collect_list materialization. */
-  private def userSequences(s: SparkSession, dir: String): DataFrame =
-    Tables.index(s, dir, "userSequences") {
-      Tables.load(s, dir, "events")
-        .groupBy("user_id")
-        .agg(transform(
-          sort_array(collect_list(struct(col("ts"), col("event_id"), col("event_type")))),
-          e => array(e.getField("event_type"))).as("sequence"))
+  /** The F-list: every item's support, item → freq, as one map literal
+    * that a key reads with `element_at` instead of joining (and
+    * broadcasting) the [[itemSupports]] memo. Collected once per session
+    * from that memo, like PFP's driver-side F-list (≤25 entries). */
+  private[graft] def fList(s: SparkSession, dir: String): Map[String, Long] =
+    Tables.sessionValue(s, dir, "fList")(
+      itemSupports(s, dir).collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+
+  /** The support of `item`, read from the [[fList]]. */
+  private def support(s: SparkSession, dir: String, item: String): Column =
+    element_at(typedLit(fList(s, dir)), col(item))
+
+  /** Per-user event-type sequences in deterministic (ts, event_id) order:
+    * the input of the [[seqPatterns]] mining. */
+  private[graft] def userSequences(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "events")
+      .groupBy("user_id")
+      .agg(transform(
+        sort_array(collect_list(struct(col("ts"), col("event_id"), col("event_type")))),
+        e => array(e.getField("event_type"))).as("sequence"))
+
+  /** Every frequent sequential pattern up to length 4 — persisted index:
+    * ml.fpm.PrefixSpan (Pei et al., ICDE 2001) mined once per corpus at
+    * MinSupUsers. Both PrefixSpan keys read it; a pattern's support does
+    * not depend on the length bound, so its ≤2 slice is exactly a
+    * length-2 mining (same policy as [[fpItemsets]]). */
+  private def seqPatterns(s: SparkSession, dir: String): DataFrame =
+    Tables.index(s, dir, "seqPatterns") {
+      new org.apache.spark.ml.fpm.PrefixSpan()
+        .setMinSupport(MinSupUsers)
+        .setMaxPatternLength(4)
+        .setSequenceCol("sequence")
+        .findFrequentSequentialPatterns(userSequences(s, dir))
     }
 
   // ---------------------------------------------------------------- queries
@@ -1065,12 +1089,13 @@ object Mining {
     basketCount(s, dir).count()
     utilityItems(s, dir).count()
     // index builds: PFP mining at both support levels + the rule table +
-    // the per-user sequence frame (one-time model/materialization costs,
+    // the sequential patterns (one-time model/materialization costs,
     // not per-query costs — same policy as the IVF codebook)
     fpItemsets(s, dir, MinSupFp, "fpItemsets").count()
     fpItemsets(s, dir, MinSupFpFull, "fpFullItemsets").count()
     fullAssocRules(s, dir).count()
-    userSequences(s, dir).count()
+    seqPatterns(s, dir).count()
+    fList(s, dir)
     frequentEdges(s, dir).count()
     frequentEdgeDegrees(s, dir).count()
   }
@@ -1080,19 +1105,15 @@ object Mining {
     * and `s_cons`: the shared input of [[fpmAssocRules]] and
     * [[fpmRuleMetrics]]. One `stack` over the thresholded pair frame
     * emits both orientations, so the frame (and its basket-count
-    * broadcast) is scanned once; the item supports are the memoized
-    * [[itemSupports]], the same `count(lit(1))` longs a per-call
-    * aggregate over `txItems` would give. */
-  private def directedPairs(s: SparkSession, dir: String): DataFrame = {
-    val supp = itemSupports(s, dir)
+    * broadcast) is scanned once; the item supports come from the
+    * [[fList]], the same `count(lit(1))` longs a per-call aggregate over
+    * `txItems` would give, with no join. */
+  private def directedPairs(s: SparkSession, dir: String): DataFrame =
     freqPairs(s, dir)
       .select(stack(lit(2), col("ia"), col("ib"), col("ib"), col("ia"))
         .as(Seq("antecedent", "consequent")), col("freq").as("sab"), col("n"))
-      .join(broadcast(supp.select(col("item").as("antecedent"), col("freq").as("s_ante"))),
-        "antecedent")
-      .join(broadcast(supp.select(col("item").as("consequent"), col("freq").as("s_cons"))),
-        "consequent")
-  }
+      .withColumn("s_ante", support(s, dir, "antecedent"))
+      .withColumn("s_cons", support(s, dir, "consequent"))
 
   /** Association rules A⇒B from frequent pairs, computed relationally so
     * the oracle can reproduce them exactly. All ratios are IEEE doubles
@@ -1461,50 +1482,38 @@ object Mining {
       .orderBy("eta", "etb")
   }
 
-  /** Full sequential-pattern mining via ml.fpm.PrefixSpan (PrefixSpan,
-    * Pei et al., ICDE 2001 — the reference family's sequence-mining
-    * variant), bounded to pattern length ≤ 2 so the oracle can enumerate
+  /** Sequential-pattern mining via ml.fpm.PrefixSpan (PrefixSpan, Pei et
+    * al., ICDE 2001 — the reference family's sequence-mining variant):
+    * the length ≤ 2 slice of [[seqPatterns]], so the oracle can enumerate
     * the identical set: length-1 = event types by distinct users,
     * length-2 = the ordered-pair support of fpm_seq_pairs. Sequences are
     * built deterministically per user in (ts, event_id) order. */
-  def fpmPrefixspan(s: SparkSession, dir: String): DataFrame = {
-    val seqs = userSequences(s, dir)
-    val patterns = new org.apache.spark.ml.fpm.PrefixSpan()
-      .setMinSupport(MinSupUsers)
-      .setMaxPatternLength(2)
-      .setSequenceCol("sequence")
-      .findFrequentSequentialPatterns(seqs)
+  def fpmPrefixspan(s: SparkSession, dir: String): DataFrame =
+    patternRows(seqPatterns(s, dir).filter(size(col("sequence")) <= 2))
+
+  /** Deeper sequential-pattern mining — `fpm_prefixspan` truncated at
+    * length 2 only so its oracle could enumerate the set; this key reads
+    * all of [[seqPatterns]], mined to length 4. Rows-only by design (a
+    * length-4 subsequence-support oracle is a 4-way ordered self-join per
+    * pattern — not reasonably SQL-enumerable); MiningSpec gates it: the
+    * ≤2 slice must equal a fresh length-2 mining and the oracle-checked
+    * `fpm_prefixspan`, patterns of length ≥ 3 must exist,
+    * and every prefix of a frequent sequence must be frequent
+    * (PrefixSpan's prefix-monotonicity invariant). Length stays bounded
+    * (4) deliberately: sequential-pattern space grows ~|types|^L and the
+    * synthetic users have ~70-event streams — the knob is the same
+    * recall/cost dial as ANN nprobe. */
+  def fpmPrefixspanFull(s: SparkSession, dir: String): DataFrame =
+    patternRows(seqPatterns(s, dir))
+
+  /** One output row per mined pattern: its steps joined by `>`. */
+  private def patternRows(patterns: DataFrame): DataFrame =
     patterns
       .select(
         concat_ws(">", transform(col("sequence"), a => element_at(a, 1))).as("pattern"),
         size(col("sequence")).cast("long").as("len"),
         col("freq"))
       .orderBy("len", "pattern")
-  }
-
-  /** Deeper sequential-pattern mining — `fpm_prefixspan` truncated at
-    * length 2 only so its oracle could enumerate the set; this key mines
-    * to length 4. Rows-only by design (a length-4 subsequence-support
-    * oracle is a 4-way ordered self-join per pattern — not reasonably
-    * SQL-enumerable); MiningSpec gates it: the ≤2 slice must equal the
-    * oracle-checked `fpm_prefixspan`, patterns of length ≥ 3 must exist,
-    * and every prefix of a frequent sequence must be frequent
-    * (PrefixSpan's prefix-monotonicity invariant). Length stays bounded
-    * (4) deliberately: sequential-pattern space grows ~|types|^L and the
-    * synthetic users have ~70-event streams — the knob is the same
-    * recall/cost dial as ANN nprobe. */
-  def fpmPrefixspanFull(s: SparkSession, dir: String): DataFrame = {
-    new org.apache.spark.ml.fpm.PrefixSpan()
-      .setMinSupport(MinSupUsers)
-      .setMaxPatternLength(4)
-      .setSequenceCol("sequence")
-      .findFrequentSequentialPatterns(userSequences(s, dir))
-      .select(
-        concat_ws(">", transform(col("sequence"), a => element_at(a, 1))).as("pattern"),
-        size(col("sequence")).cast("long").as("len"),
-        col("freq"))
-      .orderBy("len", "pattern")
-  }
 
   /** Maximal frequent itemsets within the enumerated ≤3-item universe
     * (MaxMiner/MAFIA family): frequent sets with no frequent proper
@@ -1584,18 +1593,13 @@ object Mining {
     * this plan). Threshold 0.08 sits mid-distribution (corpus pair
     * Jaccard spans 0.061–0.103 at sf0.01, measured) away from any tie
     * cluster. */
-  def fpmJaccardItems(s: SparkSession, dir: String): DataFrame = {
-    val sa = itemSupports(s, dir).select(col("item").as("ja"), col("freq").as("na"))
-    val sb = itemSupports(s, dir).select(col("item").as("jb"), col("freq").as("nb"))
+  def fpmJaccardItems(s: SparkSession, dir: String): DataFrame =
     pairSupports(s, dir)
-      .join(broadcast(sa), col("ia") === col("ja"))
-      .join(broadcast(sb), col("ib") === col("jb"))
       .select(col("ia"), col("ib"), col("freq").as("cnt_ab"),
-        (col("freq").cast("double") / (col("na") + col("nb") - col("freq")))
-          .as("jaccard"))
+        (col("freq").cast("double")
+          / (support(s, dir, "ia") + support(s, dir, "ib") - col("freq"))).as("jaccard"))
       .filter(col("jaccard") >= 0.08)
       .orderBy("ia", "ib")
-  }
 
   /** NEGATIVE association rules (Wu, Zhang & Zhang, ACM TOIS 2004):
     * a ⇒ ¬b for frequent item pairs co-occurring BELOW independence
@@ -1759,21 +1763,17 @@ object Mining {
     * pairing a rare item with a ubiquitous one — and the support ratio
     * min/max supp (a pair is "cross-support" when the ratio is small).
     * Unthresholded scoring like [[fpmRuleMetrics]]; inputs are the
-    * memoized pair/item support frames, item supports broadcast
-    * (vocabulary-bounded dimension). */
-  def fpmCrossSupport(s: SparkSession, dir: String): DataFrame = {
-    val sa = itemSupports(s, dir).select(col("item").as("ia"), col("freq").as("sa"))
-    val sb = itemSupports(s, dir).select(col("item").as("ib"), col("freq").as("sb"))
+    * memoized pair support frame and the [[fList]]. */
+  def fpmCrossSupport(s: SparkSession, dir: String): DataFrame =
     freqPairs(s, dir)
-      .join(broadcast(sa), "ia")
-      .join(broadcast(sb), "ib")
+      .withColumn("sa", support(s, dir, "ia"))
+      .withColumn("sb", support(s, dir, "ib"))
       .select(col("ia"), col("ib"), col("freq"), col("sa"), col("sb"),
         (col("freq").cast("double") / greatest(col("sa"), col("sb")).cast("double"))
           .as("h_confidence"),
         (least(col("sa"), col("sb")).cast("double")
           / greatest(col("sa"), col("sb")).cast("double")).as("support_ratio"))
       .orderBy("ia", "ib")
-  }
 
   /** FUNNEL analysis — ordered FIRST-OCCURRENCE chains: for every ordered
     * type triple (step1 → step2 → step3), how many users hit their first

@@ -1022,6 +1022,29 @@ class ContractSpec extends SparkSpec {
     }
   }
 
+  test("evicting a session keeps a live session's memo of an equal plan cached") {
+    // Spark's cache manager keeps one entry for equal plans across
+    // sessions: a's eviction must not uncache b's memo of the same plan,
+    // and b's own eviction, as the last holder, unpersists it.
+    val none = org.apache.spark.storage.StorageLevel.NONE
+    val a = spark.newSession()
+    val b = spark.newSession()
+    Tables.memo(a, sf, "spec_equal_plan") { a.range(7).toDF("v") }.count()
+    val fb = Tables.memo(b, sf, "spec_equal_plan") { b.range(7).toDF("v") }
+    assert(fb.count() == 7)
+    val level = fb.storageLevel
+    assert(level != none)
+    (0 until 8).foreach { _ =>
+      Tables.sessionValue(spark.newSession(), sf, "spec_equal_plan_churn")(())
+      Tables.memo(b, sf, "spec_equal_plan") { fail("live session b's memo was evicted") }
+    }
+    assert(fb.storageLevel == level, "evicting session a uncached session b's memo")
+    (0 until 8).foreach { _ =>
+      Tables.sessionValue(spark.newSession(), sf, "spec_equal_plan_churn")(())
+    }
+    assert(fb.storageLevel == none, "the last holder's eviction left the frame cached")
+  }
+
   test("sessionValue builds once per (session, dir, key) and again in a new session") {
     var builds = 0
     def value(s: org.apache.spark.sql.SparkSession, dir: String, key: String) =

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
 import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -81,7 +82,18 @@ class MiningSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val bounded = Mining.fpmPrefixspan(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    assert(full.filter(_._2 <= 2).toSet == bounded)
+    // both keys slice one indexed mining, so the <=2 slice is checked
+    // against a fresh mining bounded at length 2 over the same sequences
+    val fresh = new org.apache.spark.ml.fpm.PrefixSpan()
+      .setMinSupport(0.05).setMaxPatternLength(2).setSequenceCol("sequence")
+      .findFrequentSequentialPatterns(Mining.userSequences(spark, sf))
+      .collect().map { r =>
+        val steps = r.getSeq[scala.collection.Seq[String]](0).map(_.head)
+        (steps.mkString(">"), steps.length.toLong, r.getLong(1))
+      }.toSet
+    assert(fresh.exists(_._2 == 2), "the fresh mining found no length-2 pattern")
+    assert(full.filter(_._2 <= 2).toSet == fresh)
+    assert(bounded == fresh)
     assert(full.exists(_._2 >= 3), "no sequences of length >= 3 — depth not exercised")
     // prefix-monotonicity: every proper prefix of a frequent sequence is
     // frequent with support >= the sequence's
@@ -253,14 +265,16 @@ class MiningSpec extends SparkSpec {
       val deadline = System.nanoTime() + 30000000000L
       while (seen.get == null && System.nanoTime() < deadline) Thread.sleep(10)
     } finally spark.listenerManager.unregister(listener)
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case c: CommandResultExec => Seq(c.commandPhysicalPlan)
-      case o => o.children ++ o.subqueries
-    }).flatMap(nodes)
     nodes(Option(seen.get).getOrElse(fail("the noop write reported no executed plan")))
   }
+
+  /** `p` and every node below it, query stages included. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec => Seq(q.plan)
+    case c: CommandResultExec => Seq(c.commandPhysicalPlan)
+    case o => o.children ++ o.subqueries
+  }).flatMap(nodes)
 
   /** Scans of the memoized frame `memo` among `plan`'s nodes. */
   private def memoScans(plan: Seq[SparkPlan], memo: DataFrame): Int = {
@@ -307,6 +321,18 @@ class MiningSpec extends SparkSpec {
       r.getString(1), r.getDouble(2), r.getDouble(3),
       if (r.isNullAt(4)) None else Some(r.getDouble(4)))).toSet
     assert(gotMetrics == expMetrics)
+  }
+
+  test("F-list equals the itemSupports memo; the rule key broadcasts only the basket count") {
+    val supports = Mining.itemSupports(spark, sf).collect().map(r => r.getString(0) -> r.getLong(1))
+    val fl = Mining.fList(spark, sf)
+    assert(supports.nonEmpty && fl.size == supports.length && fl == supports.toMap)
+    val plan = noopWritePlan(SparkEntry.queries("fpm_assoc_rules")(spark, sf))
+    val broadcasts = plan.collect { case b: BroadcastExchangeExec => b }
+    assert(broadcasts.size == 1, s"${broadcasts.size} broadcasts, expected only the basket count's")
+    assert(memoScans(nodes(broadcasts.head), Mining.basketCount(spark, sf)) == 1,
+      "the one broadcast is not the basket count's")
+    assert(memoScans(plan, Mining.itemSupports(spark, sf)) == 0, "the rule key scans itemSupports")
   }
 
   test("topk patterns: runs through TopKPerGroupExec and equals the window form") {

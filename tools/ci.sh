@@ -5,8 +5,9 @@
 #                          #   of the 264 oracle-checked keys at sf0.001
 #                          #   (~2 min)
 #   tools/ci.sh --full     # ... plus the entry smoke, the whole
-#                          #   scalatest suite and a traced table_io
-#                          #   benchmark run (~12 min)
+#                          #   scalatest suite, a traced table_io
+#                          #   benchmark run and an untraced mining one
+#                          #   (~13 min)
 #   tools/ci.sh --sf <dir> # run the sweep against another sf dir
 #
 # The sweep is the driver's own correctness gate: graft.Verify dumps every
@@ -46,5 +47,7 @@ if [[ $FULL -eq 1 ]]; then
   sbt -batch test
   echo "[ci] traced table_io benchmark: result fingerprints and storage checks"
   python3 perfbench/run.py --workload table_io --seed 1 --seconds 12 --trace 1
+  echo "[ci] mining benchmark: result fingerprints of the itemset, rule and sequence keys"
+  python3 perfbench/run.py --workload mining --seed 1 --seconds 5 --trace 0
 fi
 echo "[ci] GREEN"
